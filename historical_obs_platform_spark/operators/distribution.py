@@ -69,354 +69,6 @@ def _moy(time_col: str = "time") -> Column:
     return F.month(time_col)
 
 
-# ------------------------------------------------------------ yellow flags
-def record_length_bypass(
-    df: DataFrame, var: str, min_years: int = 5
-) -> DataFrame:
-    """Flags 19/20 (qaqc_utils.py:203-323): a (station, calendar
-    month) with fewer than ``min_years`` distinct years of valid data
-    is too short for distribution tests — yellow-flag it (20) so the
-    distribution checks skip it but plain checks still run."""
-    if var not in df.columns:
-        return df
-    years = (
-        df.where(F.col(var).isNotNull() & Q.valid_mask(var))
-        .groupBy("station", _moy().alias("__moy"))
-        .agg(F.countDistinct(F.year("time")).alias("__n_years"))
-    )
-    short = years.where(F.col("__n_years") < min_years).select(
-        "station", "__moy", F.lit(True).alias("__too_short")
-    )
-    out = (
-        df.withColumn("__moy", _moy())
-        .join(F.broadcast(short), ["station", "__moy"], "left")
-    )
-    out = Q.write_flag(
-        out,
-        var,
-        F.col("__too_short").isNotNull() & F.col(var).isNotNull(),
-        Q.FLAG_YELLOW_VARIABLE,
-    )
-    return out.drop("__moy", "__too_short")
-
-
-# --------------------------------------------------- flag 21: monthly gap
-def monthly_median_gap_check(
-    df: DataFrame, var: str, iqr_thresh: float = 5.0
-) -> DataFrame:
-    """Flag 21 (qaqc_dist_gap_part1, qaqc_unusual_gaps.py:113-212): a
-    (year, calendar-month) whose monthly median falls outside the
-    month's climatological median ± iqr_thresh × IQR gets the whole
-    month flagged.
-
-    Per calendar month m: clim = median(var | month=m), IQR over the
-    same slice (standardized_median_bounds, qaqc_plot.py:1464-1499);
-    monthly medians per (year, m) compared against the bounds.
-    """
-    if var not in df.columns:
-        return df
-    valid = df.where(Q.valid_mask(var, keep_yellow=False) & F.col(var).isNotNull())
-    clim = valid.groupBy("station", _moy().alias("__moy")).agg(
-        F.expr(f"percentile({var}, 0.5)").alias("__clim"),
-        (
-            F.expr(f"percentile({var}, 0.75)")
-            - F.expr(f"percentile({var}, 0.25)")
-        ).alias("__iqr"),
-    )
-    yearly = valid.groupBy(
-        "station", F.year("time").alias("__yr"), _moy().alias("__moy")
-    ).agg(F.expr(f"percentile({var}, 0.5)").alias("__med"))
-    bad_months = (
-        yearly.join(clim, ["station", "__moy"])
-        .where(
-            (F.col("__med") < F.col("__clim") - iqr_thresh * F.col("__iqr"))
-            | (F.col("__med") > F.col("__clim") + iqr_thresh * F.col("__iqr"))
-        )
-        .select("station", "__yr", "__moy", F.lit(True).alias("__bad_month"))
-    )
-    out = (
-        df.withColumn("__yr", F.year("time"))
-        .withColumn("__moy", _moy())
-        .join(F.broadcast(bad_months), ["station", "__yr", "__moy"], "left")
-    )
-    out = Q.write_flag(
-        out, var, F.col("__bad_month").isNotNull(), FLAG_GAP_MONTH
-    )
-    return out.drop("__yr", "__moy", "__bad_month")
-
-
-# ---------------------------------------------- flag 22: distribution gap
-def distribution_gap_check(
-    df: DataFrame, var: str, pdf_floor: float = 0.1, min_gap_bins: int = 2
-) -> DataFrame:
-    """Flag 22 (qaqc_dist_gap_part2, qaqc_unusual_gaps.py:215-344):
-    per (station, calendar month), observations standardized by the
-    month's median/IQR; a normal fit gives tail bounds where the
-    fitted pdf drops below ``pdf_floor``; occupied histogram bins
-    beyond the bounds AND separated from the body by ≥ ``min_gap_bins``
-    empty bins are flagged.
-
-    pdf(x) = 0.1 solved exactly for the fitted normal:
-    |x−μ| > σ·sqrt(−2·ln(0.1·σ·√(2π))) (no bound when σ is large
-    enough that the pdf never reaches 0.1). Bin width 0.25 IQR-units
-    (qaqc_utils.py:59-71).
-    """
-    if var not in df.columns:
-        return df
-    valid = df.where(
-        Q.valid_mask(var, keep_yellow=False) & F.col(var).isNotNull()
-    )
-    # one percentile buffer per group, not three (exact percentile
-    # re-collects the group per call; the array form is ~3x cheaper)
-    stats = valid.groupBy("station", _moy().alias("__moy")).agg(
-        F.expr(f"percentile({var}, array(0.5, 0.25, 0.75))").alias("__p")
-    ).select(
-        "station",
-        "__moy",
-        F.col("__p")[0].alias("__med"),
-        F.greatest(
-            F.col("__p")[1 + 1] - F.col("__p")[1], F.lit(1e-9)
-        ).alias("__iqr"),
-    )
-    std = (
-        valid.withColumn("__moy", _moy())
-        .join(F.broadcast(stats), ["station", "__moy"])
-        .withColumn("__s", (F.col(var) - F.col("__med")) / F.col("__iqr"))
-        .withColumn("__bin", F.floor(F.col("__s") / F.lit(0.25)))
-    )
-    # ONE pass over the standardized rows: per-bin counts carry the
-    # moment partials (sum, sum-of-squares), and the per-month
-    # moments fold from the tiny bin table instead of re-reading the
-    # observations (the avg/stddev branch otherwise re-executes the
-    # whole std subtree — Spark plans are trees, not DAGs).
-    # Rounded to 9dp: distributed sums are shuffle-order sensitive in
-    # the last ulps, which can flip borderline threshold comparisons
-    # between runs; rounding makes the bound reproducible.
-    hist = std.groupBy("station", "__moy", "__bin").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum("__s").alias("__ss"),
-        F.sum(F.col("__s") * F.col("__s")).alias("__ss2"),
-    )
-    moments = hist.groupBy("station", "__moy").agg(
-        F.round(F.sum("__ss") / F.sum("__n"), 9).alias("__mu"),
-        F.round(
-            F.sqrt(
-                F.greatest(
-                    F.sum("__ss2") / F.sum("__n")
-                    - F.pow(F.sum("__ss") / F.sum("__n"), 2),
-                    F.lit(0.0),
-                )
-            ),
-            9,
-        ).alias("__sigma"),
-    )
-    hist = hist.select("station", "__moy", "__bin", "__n")
-    # bins sorted; a bin "starts a tail island" if the previous
-    # occupied bin is ≥ min_gap_bins+1 away from it (on that side of
-    # the bound)
-    w_up = Window.partitionBy("station", "__moy").orderBy("__bin")
-    w_dn = Window.partitionBy("station", "__moy").orderBy(F.desc("__bin"))
-    hist2 = (
-        hist.join(moments, ["station", "__moy"])
-        .withColumn(
-            "__z",
-            F.when(
-                F.lit(0.1) * F.col("__sigma") * F.lit(math.sqrt(2 * math.pi))
-                < 1.0,
-                F.col("__sigma")
-                * F.sqrt(
-                    F.lit(-2.0)
-                    * F.log(
-                        F.lit(0.1)
-                        * F.col("__sigma")
-                        * F.lit(math.sqrt(2 * math.pi))
-                    )
-                ),
-            ),
-        )
-        .withColumn("__gap_up", F.col("__bin") - F.lag("__bin").over(w_up))
-        .withColumn("__gap_dn", F.lag("__bin").over(w_dn) - F.col("__bin"))
-    )
-    # island start: gap from previous occupied bin > min_gap_bins;
-    # islands propagate outward (everything beyond a detached start on
-    # the same side is also detached)
-    hi_bound = (F.col("__mu") + F.col("__z")) / 0.25
-    lo_bound = (F.col("__mu") - F.col("__z")) / 0.25
-    detached_hi = F.max(
-        F.when(
-            (F.col("__bin") > hi_bound) & (F.col("__gap_up") > min_gap_bins),
-            F.col("__bin"),
-        )
-    ).over(
-        Window.partitionBy("station", "__moy")
-        .orderBy("__bin")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    detached_lo = F.min(
-        F.when(
-            (F.col("__bin") < lo_bound) & (F.col("__gap_dn") > min_gap_bins),
-            F.col("__bin"),
-        )
-    ).over(
-        Window.partitionBy("station", "__moy")
-        .orderBy("__bin")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    bad_bins = (
-        hist2.withColumn("__dhi", detached_hi)
-        .withColumn("__dlo", detached_lo)
-        .where(
-            F.col("__z").isNotNull()
-            & (
-                (F.col("__dhi").isNotNull() & (F.col("__bin") >= F.col("__dhi")))
-                | (F.col("__dlo").isNotNull() & (F.col("__bin") <= F.col("__dlo")))
-            )
-        )
-        .select("station", "__moy", "__bin", F.lit(True).alias("__bad_bin"))
-    )
-    # Flag by (station, month, bin) membership directly on the full
-    # frame: bad_bins is histogram-bounded (bins, not observations),
-    # so it broadcasts at any corpus size. The alternative — a
-    # left-semi through the std branch and a (station, time) join
-    # back — recomputes the standardization subtree AND sort-merge-
-    # joins the full wide frame (measured 11 s → 3 s at 1.58 M rows).
-    enriched = (
-        df.withColumn("__moy", _moy())
-        .join(F.broadcast(stats), ["station", "__moy"], "left")
-        .withColumn("__s", (F.col(var) - F.col("__med")) / F.col("__iqr"))
-        .withColumn("__bin", F.floor(F.col("__s") / F.lit(0.25)))
-        .join(F.broadcast(bad_bins), ["station", "__moy", "__bin"], "left")
-    )
-    out = Q.write_flag(
-        enriched,
-        var,
-        F.col("__bad_bin").isNotNull()
-        & Q.valid_mask(var, keep_yellow=False)
-        & F.col(var).isNotNull(),
-        FLAG_GAP_DISTRIBUTION,
-    )
-    return out.drop(
-        "__moy", "__med", "__iqr", "__s", "__bin", "__bad_bin"
-    )
-
-
-# ------------------------------------------- flags 24/25: frequent values
-def frequent_values_check(
-    df: DataFrame,
-    var: str,
-    annual_min_count: int = 30,
-    seasonal_min_count: int = 20,
-    dominance: float = 0.5,
-    neighborhood: int = 3,
-) -> DataFrame:
-    """Flags 24 (whole-record) / 25 (seasonal) (qaqc_frequent.py:
-    223-563): a histogram bin holding > ``dominance`` of its ±3-bin
-    block with enough observations marks all its values as suspiciously
-    frequent. Three granularities run: whole-record (threshold 30),
-    per-season over the record (20), and per-season-per-year (15, with
-    December attributed to the following winter-year). Seasons are
-    DJF/MAM/JJA/SON. tas ↔ tdps are synergistically flagged by the
-    caller (L10).
-
-    DELIBERATE DEVIATION (SURVEY.md §7): the reference stages a
-    provisional flag 100 from the whole-record pass and lets the
-    per-year passes confirm or clear it (qaqc_frequent.py:126-185);
-    here each granularity flags directly — a bin dominant over the
-    whole record is flagged even if no single year confirms it
-    (strictly more conservative, order-independent)."""
-    if var not in df.columns:
-        return df
-    width = BIN_WIDTHS.get(var, 1.0)
-    valid = df.where(Q.valid_mask(var) & F.col(var).isNotNull()).withColumn(
-        "__bin", F.floor(F.col(var) / F.lit(width))
-    )
-
-    season = (
-        F.when(F.month("time").isin(12, 1, 2), "DJF")
-        .when(F.month("time").isin(3, 4, 5), "MAM")
-        .when(F.month("time").isin(6, 7, 8), "JJA")
-        .otherwise("SON")
-    )
-
-    def bad_bins(grouped: DataFrame, keys: list[str], min_count: int):
-        w = (
-            Window.partitionBy("station", *keys)
-            .orderBy("__bin")
-            .rangeBetween(-neighborhood, neighborhood)
-        )
-        return (
-            grouped.withColumn("__block", F.sum("__n").over(w))
-            .where(
-                (F.col("__n") > F.col("__block") * dominance)
-                & (F.col("__n") > min_count)
-            )
-            .select("station", *keys, "__bin")
-        )
-
-    # winter (DJF) belongs to the year of its Jan/Feb: December is
-    # attributed to the FOLLOWING winter-year (qaqc_frequent.py:407-462)
-    season_year = F.year("time") + F.when(
-        F.month("time") == 12, F.lit(1)
-    ).otherwise(F.lit(0))
-
-    # ONE corpus pass builds the FINEST histogram; the annual and
-    # seasonal granularities roll up from it (counts are additive) on
-    # the bin-table-sized result. Three independent groupBys here
-    # meant three scans of the segment checkpoint per variable —
-    # measured 6 scans → 2 across (tas, tdps) in the battery. The
-    # checkpoint makes the finest hist a leaf for its three consumers
-    # (Spark plans are trees; without it each rollup re-executes the
-    # corpus aggregation).
-    finest = (
-        valid.withColumn("__season", season)
-        .withColumn("__syear", season_year)
-        .groupBy("station", "__season", "__syear", "__bin")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=False)
-    )
-    annual_hist = finest.groupBy("station", "__bin").agg(
-        F.sum("__n").alias("__n")
-    )
-    annual_bad = bad_bins(annual_hist, [], annual_min_count)
-
-    seasonal_hist = finest.groupBy("station", "__season", "__bin").agg(
-        F.sum("__n").alias("__n")
-    )
-    seasonal_bad = bad_bins(seasonal_hist, ["__season"], seasonal_min_count)
-
-    # per-year-per-season pass (threshold 15, qaqc_frequent.py:223-464)
-    yearly_bad = bad_bins(finest, ["__season", "__syear"], 15)
-
-    out = df.withColumn("__bin", F.floor(F.col(var) / F.lit(width)))
-    out = out.join(
-        F.broadcast(annual_bad.withColumn("__freq_a", F.lit(True))),
-        ["station", "__bin"],
-        "left",
-    )
-    out = Q.write_flag(
-        out, var, F.col("__freq_a").isNotNull(), FLAG_FREQ_ANNUAL
-    )
-    out = out.withColumn("__season", season).join(
-        F.broadcast(seasonal_bad.withColumn("__freq_s", F.lit(True))),
-        ["station", "__season", "__bin"],
-        "left",
-    )
-    out = Q.write_flag(
-        out, var, F.col("__freq_s").isNotNull(), FLAG_FREQ_SEASONAL
-    )
-    out = out.withColumn("__syear", season_year).join(
-        F.broadcast(yearly_bad.withColumn("__freq_y", F.lit(True))),
-        ["station", "__season", "__syear", "__bin"],
-        "left",
-    )
-    out = Q.write_flag(
-        out, var, F.col("__freq_y").isNotNull(), FLAG_FREQ_SEASONAL
-    )
-    return out.drop(
-        "__bin", "__season", "__syear", "__freq_a", "__freq_s", "__freq_y"
-    )
-
-
 def synergistic_flag_copy(
     df: DataFrame, var_a: str = "tas", var_b: str = "tdps"
 ) -> DataFrame:
@@ -614,13 +266,20 @@ def _melt_valid(
 def same_hour_streak_multi(
     df: DataFrame, vars, min_days: int = 15
 ) -> DataFrame:
-    """Flag 27 for a whole variable family in ONE corpus pass (melt →
-    one distinct → one sessionize keyed by (station, var, hour,
-    value)); per-variable back-joins are broadcast, bin-table-sized.
-    Flag-identical to applying ``same_hour_streak_check`` per var in
-    sequence: a var's streak clusters depend only on its own values
-    and its own prior flags, neither of which the other vars' passes
-    touch."""
+    """Flag 27 (hourly_repeats, qaqc_unusual_streaks.py:474-570): for a
+    given hour-of-day, the same value repeating on > ``min_days``
+    consecutive days (gap ≤ 1 day) is instrument failure.
+
+    Clusters are runs of distinct *days* (find_date_clusters scans the
+    sorted unique dates, :474-511); clustering distinct days rather
+    than rows both matches the reference's day-count threshold and
+    keeps the window sort free of same-day ties (deterministic).
+
+    The family runs in ONE corpus pass (melt → one distinct → one
+    sessionize keyed by (station, var, hour, value)); per-variable
+    back-joins are broadcast, bin-table-sized. A var's check reads
+    only its own values and flags and writes only its own ``_eraqc``
+    column, so ``vars=[a, b]`` flags exactly as ``[a]`` then ``[b]``."""
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
@@ -684,10 +343,12 @@ def same_hour_streak_multi(
 def whole_day_streak_multi(
     df: DataFrame, vars, min_days: int = 5, round_digits: int = 1
 ) -> DataFrame:
-    """Flag 29 for a whole variable family in ONE corpus pass (melt →
-    one per-(station, var, day) vector aggregation); flag-identical to
-    the sequential per-var form (same independence argument as
-    ``same_hour_streak_multi``)."""
+    """Flag 29 (full_day_compare, qaqc_unusual_streaks.py:697-818): a
+    run of > ``min_days`` consecutive days whose full rounded daily
+    value-vector is identical to the previous day's. The family runs
+    in ONE corpus pass (melt → one per-(station, var, day) vector
+    aggregation); each var reads and writes only its own columns, as
+    in ``same_hour_streak_multi``."""
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
@@ -712,6 +373,9 @@ def whole_day_streak_multi(
     w_run = Window.partitionBy("station", "__var", "__run")
     bad_days = (
         runs.withColumn("__len", F.count(F.lit(1)).over(w_run))
+        # a run of equal days of length L covers L+1 calendar days; the
+        # reference counts repeats, we count rows with __same=true plus
+        # the anchor — flag when strictly more than min_days repeats
         .where(F.col("__same") & (F.col("__len") >= min_days))
         .select("station", "__var", "__day")
         .localCheckpoint(eager=False)
@@ -725,96 +389,6 @@ def whole_day_streak_multi(
             FLAG_STREAK_DAY,
         )
     return out
-
-
-# ------------------------------------------------- flag 27: hourly streaks
-def same_hour_streak_check(
-    df: DataFrame, var: str, min_days: int = 15
-) -> DataFrame:
-    """Flag 27 (hourly_repeats, qaqc_unusual_streaks.py:474-570): for a
-    given hour-of-day, the same value repeating on > ``min_days``
-    consecutive days (gap ≤ 1 day) is instrument failure.
-
-    Clusters are runs of distinct *days* (find_date_clusters scans the
-    sorted unique dates, :474-511); clustering distinct days rather
-    than rows both matches the reference's day-count threshold and
-    keeps the window sort free of same-day ties (deterministic)."""
-    if var not in df.columns:
-        return df
-    valid = df.where(Q.valid_mask(var) & F.col(var).isNotNull()).select(
-        "station",
-        F.hour("time").alias("__hh"),
-        F.to_date("time").alias("__day"),
-        F.col(var).alias("__v"),
-    )
-    days = valid.distinct()
-    w = Window.partitionBy("station", "__hh", "__v").orderBy("__day")
-    clustered = sessionize(
-        days.withColumn(
-            "__gap", F.datediff(F.col("__day"), F.lag("__day").over(w))
-        ),
-        ["station", "__hh", "__v"],
-        "__day",
-        F.col("__gap") > 1,
-        out="__cluster",
-    )
-    w_c = Window.partitionBy("station", "__hh", "__v", "__cluster")
-    bad = (
-        clustered.withColumn("__n_days", F.count(F.lit(1)).over(w_c))
-        .where(F.col("__n_days") > min_days)
-        .select("station", "__hh", "__v", "__day")
-        .withColumn("__bad_hour_day", F.lit(True))
-    )
-    out = (
-        df.withColumn("__hh", F.hour("time"))
-        .withColumn("__day", F.to_date("time"))
-        .withColumn("__v", F.col(var))
-        .join(
-            F.broadcast(bad),
-            ["station", "__hh", "__v", "__day"],
-            "left",
-        )
-    )
-    out = Q.write_flag(
-        out, var, F.col("__bad_hour_day").isNotNull(), FLAG_STREAK_HOUR
-    )
-    return out.drop("__bad_hour_day", "__hh", "__day", "__v")
-
-
-# ----------------------------------------------- flag 29: whole-day repeats
-def whole_day_streak_check(
-    df: DataFrame, var: str, min_days: int = 5, round_digits: int = 1
-) -> DataFrame:
-    """Flag 29 (full_day_compare, qaqc_unusual_streaks.py:697-818): a
-    run of > ``min_days`` consecutive days whose full rounded daily
-    value-vector is identical to the previous day's."""
-    if var not in df.columns:
-        return df
-    valid = df.where(Q.valid_mask(var) & F.col(var).isNotNull())
-    days = valid.groupBy(
-        "station", F.to_date("time").alias("__day")
-    ).agg(
-        F.sort_array(
-            F.collect_list(F.round(F.col(var), round_digits))
-        ).alias("__vec")
-    )
-    w = ordered_window("station", "__day")
-    same = days.withColumn(
-        "__same",
-        (F.col("__vec") == F.lag("__vec").over(w))
-        & (F.datediff(F.col("__day"), F.lag("__day").over(w)) == 1),
-    )
-    runs = sessionize(same, "station", "__day", ~F.col("__same"), out="__run")
-    w_run = Window.partitionBy("station", "__run")
-    bad_days = (
-        runs.withColumn("__len", F.count(F.lit(1)).over(w_run))
-        # a run of equal days of length L covers L+1 calendar days; the
-        # reference counts repeats, we count rows with __same=true plus
-        # the anchor — flag when strictly more than min_days repeats
-        .where(F.col("__same") & (F.col("__len") >= min_days))
-        .select("station", "__day")
-    )
-    return _flag_days(df, var, bad_days, FLAG_STREAK_DAY)
 
 
 # ------------------------------------- flag 26: climatological outlier
@@ -886,6 +460,8 @@ def _grid_gap_bounds(
 
 
 _CUT_PERIOD_S = 3600.0 * 24 * 365 / 30  # reference cut_freq inverse
+_WINSOR_LIMIT = 0.05  # per tail, like winsorize(limits=(0.05, 0.05))
+_IQR_FLOOR = 1.5
 
 
 def _q9_np(a):
@@ -961,11 +537,78 @@ def _grid_gap_bounds_exact(r: np.ndarray) -> tuple[float | None, float | None]:
     return cut_lo, cut_hi
 
 
+def _clim_fast_per_station(
+    pdf: pd.DataFrame, var: str, flag_col: str
+) -> pd.DataFrame:
+    """Clim-outlier island for one station and one variable (the steps
+    listed in ``climatological_outlier_multi``). Reads ``var`` and its
+    flag column; returns the flagged (station, time) keys."""
+    pdf = pdf.sort_values("time").reset_index(drop=True)
+    mask = pdf[flag_col].isnull() & pdf[var].notna()
+    empty = pdf.iloc[0:0][["station", "time"]]
+    if mask.sum() < 20:
+        return empty
+    sub = pdf.loc[mask, ["time", var]].copy()
+    key = sub["time"].dt.month * 100 + sub["time"].dt.hour
+
+    # (month, hour) winsorized-mean climatology (rank-based, like
+    # stats.mstats.winsorize)
+    def clim(group: pd.Series) -> float:
+        a = np.sort(group.to_numpy())
+        n = len(a)
+        k = int(_WINSOR_LIMIT * n)
+        if k:
+            a[:k] = a[k]
+            a[n - k :] = a[n - k - 1]
+        return float(a.mean())
+
+    clim_map = sub[var].groupby(key).apply(clim)
+    anom = sub[var].values - clim_map.loc[key].values
+
+    # standardize by (month, hour) IQR (floored)
+    iqr_map = (
+        pd.Series(anom, index=key.values)
+        .groupby(level=0)
+        .apply(lambda g: max(g.quantile(0.75) - g.quantile(0.25), _IQR_FLOOR))
+    )
+    std = anom / iqr_map.loc[key.values].values
+
+    # interpolate + low-pass at the reference's cut period
+    s = pd.Series(std).interpolate(limit_direction="both").to_numpy()
+    cadence = (
+        sub["time"].diff().dt.total_seconds().dropna().mode().iloc[0]
+        if len(sub) > 1
+        else 3600.0
+    )
+    cutoff_frac = 2.0 * max(cadence, 1.0) / _CUT_PERIOD_S
+    if cutoff_frac >= 1.0:  # reference bypass: cut_freq ≥ Nyquist
+        return empty
+    resid = s - _butter_lowpass_order1(s, cutoff_frac)
+
+    # per (month, hour): grid-fit thresholds + gap isolation
+    rmh = pd.DataFrame({"k": key.values, "r": resid})
+    flags = np.zeros(len(rmh), dtype=bool)
+    for _, g in rmh.groupby("k"):
+        if len(g) <= 5:  # reference small-group bypass
+            continue
+        cut_lo, cut_hi = _grid_gap_bounds(g["r"].to_numpy())
+        gm = np.zeros(len(g), dtype=bool)
+        if cut_lo is not None:
+            gm |= g["r"].to_numpy() <= cut_lo
+        if cut_hi is not None:
+            gm |= g["r"].to_numpy() >= cut_hi
+        flags[g.index.to_numpy()] = gm
+    if not flags.any():
+        return empty
+    hit = pdf.iloc[np.flatnonzero(mask.values)[flags]]
+    return hit[["station", "time"]]
+
+
 def _clim_exact_per_station(
     pdf: pd.DataFrame, var: str, flag_col: str
 ) -> pd.DataFrame:
-    """Exact-mode clim-outlier island: the same algorithm as the
-    faithful island in `climatological_outlier_check`, respelled so
+    """Exact-mode clim-outlier island: the same algorithm as
+    `_clim_fast_per_station`, respelled so
     every float is bit-reproducible by a SQL engine evaluating the
     same expression tree — winsorized means from exact nano-int sums,
     explicit linear-interpolation quantiles, stage-boundary `_q9_np`
@@ -990,7 +633,7 @@ def _clim_exact_per_station(
     for k in uniq:
         a = np.sort(v[key == k])
         n = len(a)
-        kk = int(0.05 * n)
+        kk = int(_WINSOR_LIMIT * n)
         if kk:
             a[:kk] = a[kk]
             a[n - kk :] = a[n - kk - 1]
@@ -1011,7 +654,9 @@ def _clim_exact_per_station(
     for k in uniq:
         a = np.sort(anom[key == k])
         iqr_raw = _quant(a, 0.75) - _quant(a, 0.25)
-        denom_by_key[k] = max(float(np.rint(iqr_raw * 1e9) / 1e9), 1.5)
+        denom_by_key[k] = max(
+            float(np.rint(iqr_raw * 1e9) / 1e9), _IQR_FLOOR
+        )
     s = _q9_np(anom / np.array([denom_by_key[k] for k in key]))
 
     # cadence: modal microsecond gap (ties -> smallest)
@@ -1049,152 +694,12 @@ def _clim_exact_per_station(
     return sub.loc[np.flatnonzero(flags), ["station", "time"]].drop_duplicates()
 
 
-def climatological_outlier_check(
-    df: DataFrame,
-    var: str,
-    winsor_limits: tuple[float, float] = (0.05, 0.05),
-    iqr_floor: float = 1.5,
-    bin_size: float = 0.25,
-    exact_mode: bool = False,
-) -> DataFrame:
-    """Flag 26 (qaqc_climatological_outlier.py:33-247): per station —
-
-    1. anomaly vs the (month, hour) winsorized-mean climatology (A5;
-       rank-based winsorization like ``stats.mstats.winsorize`` with
-       limits (0.05, 0.05));
-    2. standardized by the (month, hour) IQR (floored at 1.5);
-    3. low-passed with an order-1 Butterworth (the reference's
-       1 051 200 s cut period) after linear interpolation (W9/W10);
-    4. per (month, hour) group (> 5 values): histogram-grid normal-fit
-       thresholds where the scaled pdf crosses 0.1, gap-isolated tails
-       flagged (``_grid_gap_bounds``).
-
-    Documented deviations (intent-preserving; SURVEY.md §7 "reference
-    bugs to adjudicate"): (a) we flag outliers of the *residual*
-    (std − low-pass) rather than of the low-passed series itself —
-    the reference assigns ``df_valid[var] = filtered`` and so flags
-    the smooth component, which suppresses exactly the point outliers
-    the check documents (qaqc_climatological_outlier.py:177-183);
-    (b) only gap-isolated ("red") tails flag — the reference's
-    no-gap "yellow" tier also collapses into flag 26
-    (flag_clim_outliers :297-320), which would flag every beyond-3σ
-    value in ordinary noise; (c) the right-side red cutoff mirrors the
-    left (the reference compares against ``right_bad_bins.max()``,
-    flagging only the outermost bin — :289-294).
-
-    The per-station sequential part (filter) runs in ``applyInPandas``
-    — the group is one station (the reference's unit of work), so the
-    pandas island is bounded by the same ≈4.4 M-row invariant.
-    """
-    if var not in df.columns:
-        return df
-
-    flag_col = Q.eraqc(var)
-    lo_lim, hi_lim = winsor_limits
-    cut_period_s = 3600.0 * 24 * 365 / 30  # reference cut_freq inverse
-
-    def per_station(pdf: pd.DataFrame) -> pd.DataFrame:
-        # input is the skinny projection (station, time, var, flag);
-        # output is just the flagged keys — Arrow traffic stays ~10×
-        # smaller than shipping the full observation schema per station
-        pdf = pdf.sort_values("time").reset_index(drop=True)
-        mask = pdf[flag_col].isnull() & pdf[var].notna()
-        empty = pdf.iloc[0:0][["station", "time"]]
-        if mask.sum() < 20:
-            return empty
-        sub = pdf.loc[mask, ["time", var]].copy()
-        month = sub["time"].dt.month
-        hour = sub["time"].dt.hour
-        key = month * 100 + hour
-
-        # (month, hour) winsorized-mean climatology (rank-based, like
-        # stats.mstats.winsorize)
-        def clim(group: pd.Series) -> float:
-            a = np.sort(group.to_numpy())
-            n = len(a)
-            lo, hi = int(lo_lim * n), int(hi_lim * n)
-            if lo:
-                a[:lo] = a[lo]
-            if hi:
-                a[n - hi :] = a[n - hi - 1]
-            return float(a.mean())
-
-        clim_map = sub[var].groupby(key).apply(clim)
-        anom = sub[var].values - clim_map.loc[key].values
-
-        # standardize by (month, hour) IQR (floored)
-        iqr_map = (
-            pd.Series(anom, index=key.values)
-            .groupby(level=0)
-            .apply(lambda g: max(g.quantile(0.75) - g.quantile(0.25), iqr_floor))
-        )
-        std = anom / iqr_map.loc[key.values].values
-
-        # interpolate + low-pass at the reference's cut period
-        s = pd.Series(std).interpolate(limit_direction="both").to_numpy()
-        cadence = (
-            sub["time"].diff().dt.total_seconds().dropna().mode().iloc[0]
-            if len(sub) > 1
-            else 3600.0
-        )
-        cutoff_frac = 2.0 * max(cadence, 1.0) / cut_period_s
-        if cutoff_frac >= 1.0:  # reference bypass: cut_freq ≥ Nyquist
-            return empty
-        smooth = _butter_lowpass_order1(s, cutoff_frac)
-        resid = s - smooth
-
-        # per (month, hour): grid-fit thresholds + gap isolation
-        rmh = pd.DataFrame({"k": key.values, "r": resid})
-        flags = np.zeros(len(rmh), dtype=bool)
-        for _, g in rmh.groupby("k"):
-            if len(g) <= 5:  # reference small-group bypass
-                continue
-            cut_lo, cut_hi = _grid_gap_bounds(g["r"].to_numpy(), bin_size)
-            gm = np.zeros(len(g), dtype=bool)
-            if cut_lo is not None:
-                gm |= g["r"].to_numpy() <= cut_lo
-            if cut_hi is not None:
-                gm |= g["r"].to_numpy() >= cut_hi
-            flags[g.index.to_numpy()] = gm
-        if not flags.any():
-            return empty
-        hit = pdf.iloc[np.flatnonzero(mask.values)[flags]]
-        return hit[["station", "time"]]
-
-    island = (
-        (lambda pdf: _clim_exact_per_station(pdf, var, flag_col))
-        if exact_mode
-        else per_station
-    )
-    skinny = df.select("station", "time", var, flag_col)
-    bad_keys = skinny.groupBy("station").applyInPandas(
-        island, schema="station string, time timestamp"
-    )
-    out = df.join(
-        bad_keys.withColumn("__clim_bad", F.lit(True)),
-        ["station", "time"],
-        "left",
-    )
-    out = out.withColumn(
-        flag_col,
-        F.when(
-            F.col("__clim_bad").isNotNull() & F.col(flag_col).isNull(),
-            F.lit(float(FLAG_CLIM_OUTLIER)),
-        ).otherwise(F.col(flag_col)),
-    )
-    return out.drop("__clim_bad")
-
-
 # ------------------------------------------------------------------ #
-# Round-8 cross-variable family fusions: the four remaining
-# corpus-sized battery branches (frequent values, monthly gap,
-# distribution gap, clim-outlier islands) each re-scanned the segment
-# checkpoint once PER VARIABLE; these run each family in ONE melted
-# corpus pass (the r6 same_hour/whole_day/spike precedent). Flag
-# output is provably identical to the sequential per-var calls: a
-# var's check reads only its own values and its own prior flags, and
-# writes only its own _eraqc column (the one cross-var writer,
-# synergistic_flag_copy, remains its own chain step AFTER the family).
+# Each check below runs a whole variable family in ONE melted corpus
+# pass. A var's check reads only its own values and its own prior
+# flags, and writes only its own _eraqc column (the one cross-var
+# writer, synergistic_flag_copy, is its own chain step AFTER the
+# family), so ``vars=[a, b]`` flags exactly as ``[a]`` then ``[b]``.
 # ------------------------------------------------------------------ #
 def _width_expr(vars: list[str]):
     e = F.lit(1.0)
@@ -1208,7 +713,10 @@ def _width_expr(vars: list[str]):
 def record_length_bypass_multi(
     df: DataFrame, vars, min_years: int = 5
 ) -> DataFrame:
-    """A11 (flags 19/20) for a variable family in one melted pass."""
+    """Flags 19/20 (A11, qaqc_utils.py:203-323): a (station, calendar
+    month) with fewer than ``min_years`` distinct years of valid data
+    is too short for distribution tests — yellow-flag it (20) so the
+    distribution checks skip it but plain checks still run."""
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
@@ -1249,10 +757,25 @@ def frequent_values_multi(
     dominance: float = 0.5,
     neighborhood: int = 3,
 ) -> DataFrame:
-    """Flags 24/25 for a variable family in ONE corpus pass: melted
-    finest histogram per (var, station, season, season-year, bin),
-    annual/seasonal granularities rolled up from it (the r6
-    finest-rollup move, now also across vars)."""
+    """Flags 24 (whole-record) / 25 (seasonal) (qaqc_frequent.py:
+    223-563): a histogram bin holding > ``dominance`` of its ±3-bin
+    block with enough observations marks all its values as suspiciously
+    frequent. Three granularities run: whole-record (threshold 30),
+    per-season over the record (20), and per-season-per-year (15, with
+    December attributed to the following winter-year). Seasons are
+    DJF/MAM/JJA/SON. tas ↔ tdps are synergistically flagged by the
+    caller (L10).
+
+    DELIBERATE DEVIATION (SURVEY.md §7): the reference stages a
+    provisional flag 100 from the whole-record pass and lets the
+    per-year passes confirm or clear it (qaqc_frequent.py:126-185);
+    here each granularity flags directly — a bin dominant over the
+    whole record is flagged even if no single year confirms it
+    (strictly more conservative, order-independent).
+
+    ONE corpus pass builds the finest melted histogram per (var,
+    station, season, season-year, bin); the annual and seasonal
+    granularities roll up from it (counts are additive)."""
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
@@ -1356,8 +879,14 @@ def frequent_values_multi(
 def monthly_median_gap_multi(
     df: DataFrame, vars, iqr_thresh: float = 5.0
 ) -> DataFrame:
-    """Flag 21 for a variable family in one melted pass (percentile
-    state folds per (var, station, month) in the same aggregation)."""
+    """Flag 21 (qaqc_dist_gap_part1, qaqc_unusual_gaps.py:113-212): a
+    (year, calendar-month) whose monthly median falls outside the
+    month's climatological median ± iqr_thresh × IQR gets the whole
+    month flagged. Per calendar month m: clim = median(var | month=m),
+    IQR over the same slice (standardized_median_bounds,
+    qaqc_plot.py:1464-1499); monthly medians per (year, m) compared
+    against the bounds. Percentile state folds per (var, station,
+    month) in one melted aggregation."""
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
@@ -1414,10 +943,20 @@ def distribution_gap_multi(
     pdf_floor: float = 0.1,
     min_gap_bins: int = 2,
 ) -> DataFrame:
-    """Flag 22 for a variable family in one melted pass: the
-    standardized histogram + moment partials fold per (var, station,
-    month) exactly as the single-var form, with __var riding every
-    key."""
+    """Flag 22 (qaqc_dist_gap_part2, qaqc_unusual_gaps.py:215-344):
+    per (station, calendar month), observations standardized by the
+    month's median/IQR; a normal fit gives tail bounds where the
+    fitted pdf drops below ``pdf_floor``; occupied histogram bins
+    beyond the bounds AND separated from the body by ≥ ``min_gap_bins``
+    empty bins are flagged.
+
+    pdf(x) = 0.1 solved exactly for the fitted normal:
+    |x−μ| > σ·sqrt(−2·ln(0.1·σ·√(2π))) (no bound when σ is large
+    enough that the pdf never reaches 0.1). Bin width 0.25 IQR-units
+    (qaqc_utils.py:59-71). The standardized histogram + moment
+    partials fold per (var, station, month) in one melted pass; the
+    moments are rounded to 9dp because distributed sums are
+    shuffle-order sensitive in the last ulps."""
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
@@ -1573,117 +1112,61 @@ def distribution_gap_multi(
 
 
 def climatological_outlier_multi(
-    df: DataFrame,
-    vars,
-    winsor_limits: tuple[float, float] = (0.05, 0.05),
-    iqr_floor: float = 1.5,
-    bin_size: float = 0.25,
+    df: DataFrame, vars, exact_mode: bool = False
 ) -> DataFrame:
-    """Flag 26 for a variable family in ONE ``applyInPandas`` island:
-    the per-station group ships (station, time, var..., flag...) once
-    and runs each variable's winsorize → IQR-standardize → low-pass →
-    grid-gap pipeline inside the same pandas call — halving the
-    Arrow traffic and the per-station grouping shuffle that the
-    sequential per-var islands each paid. Flag-identical: each
-    variable's pipeline reads only its own values and its own prior
-    flags (fast-path only; the ``exact_mode`` variant stays per-var).
+    """Flag 26 (qaqc_climatological_outlier.py:33-247): per station —
+
+    1. anomaly vs the (month, hour) winsorized-mean climatology (A5;
+       rank-based winsorization like ``stats.mstats.winsorize`` with
+       limits (0.05, 0.05));
+    2. standardized by the (month, hour) IQR (floored at 1.5);
+    3. low-passed with an order-1 Butterworth (the reference's
+       1 051 200 s cut period) after linear interpolation (W9/W10);
+    4. per (month, hour) group (> 5 values): histogram-grid normal-fit
+       thresholds where the scaled pdf crosses 0.1, gap-isolated tails
+       flagged (``_grid_gap_bounds``).
+
+    Documented deviations (intent-preserving; SURVEY.md §7 "reference
+    bugs to adjudicate"): (a) we flag outliers of the *residual*
+    (std − low-pass) rather than of the low-passed series itself —
+    the reference assigns ``df_valid[var] = filtered`` and so flags
+    the smooth component, which suppresses exactly the point outliers
+    the check documents (qaqc_climatological_outlier.py:177-183);
+    (b) only gap-isolated ("red") tails flag — the reference's
+    no-gap "yellow" tier also collapses into flag 26
+    (flag_clim_outliers :297-320), which would flag every beyond-3σ
+    value in ordinary noise; (c) the right-side red cutoff mirrors the
+    left (the reference compares against ``right_bad_bins.max()``,
+    flagging only the outermost bin — :289-294).
+
+    The per-station sequential part runs in ONE ``applyInPandas``
+    island for the whole family — the group is one station (the
+    reference's unit of work), shipped once as the skinny projection
+    (station, time, var..., flag...); output is just the flagged keys.
+    Each variable runs its own island function (``exact_mode`` picks
+    the SQL-reproducible ``_clim_exact_per_station``) on its own values
+    and flags and writes only its own ``_eraqc`` column.
     """
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
-    flag_cols = {v: Q.eraqc(v) for v in vars}
-    lo_lim, hi_lim = winsor_limits
-    cut_period_s = 3600.0 * 24 * 365 / 30
-    var_list = list(vars)
-    fc_list = [flag_cols[v] for v in var_list]
+    island = _clim_exact_per_station if exact_mode else _clim_fast_per_station
+    flag_cols = [Q.eraqc(v) for v in vars]
 
     def per_station(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time").reset_index(drop=True)
-        outs = []
-        empty = pdf.iloc[0:0][["station", "time"]].assign(
-            var=pd.Series(dtype="object")
-        )[["station", "time", "var"]]
-        for var, flag_col in zip(var_list, fc_list):
-            mask = pdf[flag_col].isnull() & pdf[var].notna()
-            if mask.sum() < 20:
-                continue
-            sub = pdf.loc[mask, ["time", var]].copy()
-            month = sub["time"].dt.month
-            hour = sub["time"].dt.hour
-            key = month * 100 + hour
-
-            def clim(group: pd.Series) -> float:
-                a = np.sort(group.to_numpy())
-                n = len(a)
-                lo, hi = int(lo_lim * n), int(hi_lim * n)
-                if lo:
-                    a[:lo] = a[lo]
-                if hi:
-                    a[n - hi:] = a[n - hi - 1]
-                return float(a.mean())
-
-            clim_map = sub[var].groupby(key).apply(clim)
-            anom = sub[var].values - clim_map.loc[key].values
-            iqr_map = (
-                pd.Series(anom, index=key.values)
-                .groupby(level=0)
-                .apply(
-                    lambda g: max(
-                        g.quantile(0.75) - g.quantile(0.25), iqr_floor
-                    )
-                )
-            )
-            std = anom / iqr_map.loc[key.values].values
-            s = (
-                pd.Series(std)
-                .interpolate(limit_direction="both")
-                .to_numpy()
-            )
-            cadence = (
-                sub["time"].diff().dt.total_seconds().dropna().mode()
-                .iloc[0]
-                if len(sub) > 1
-                else 3600.0
-            )
-            cutoff_frac = 2.0 * max(cadence, 1.0) / cut_period_s
-            if cutoff_frac >= 1.0:
-                continue
-            smooth = _butter_lowpass_order1(s, cutoff_frac)
-            resid = s - smooth
-            rmh = pd.DataFrame({"k": key.values, "r": resid})
-            flags = np.zeros(len(rmh), dtype=bool)
-            for _, g in rmh.groupby("k"):
-                if len(g) <= 5:
-                    continue
-                cut_lo, cut_hi = _grid_gap_bounds(
-                    g["r"].to_numpy(), bin_size
-                )
-                gm = np.zeros(len(g), dtype=bool)
-                if cut_lo is not None:
-                    gm |= g["r"].to_numpy() <= cut_lo
-                if cut_hi is not None:
-                    gm |= g["r"].to_numpy() >= cut_hi
-                flags[g.index.to_numpy()] = gm
-            if not flags.any():
-                continue
-            hit = pdf.iloc[np.flatnonzero(mask.values)[flags]]
-            outs.append(
-                hit[["station", "time"]].assign(var=var)
-            )
-        if not outs:
-            return empty
-        return pd.concat(outs, ignore_index=True)[
-            ["station", "time", "var"]
+        hits = [
+            island(pdf, v, fc).assign(var=v)
+            for v, fc in zip(vars, flag_cols)
         ]
+        return pd.concat(hits, ignore_index=True)[["station", "time", "var"]]
 
-    skinny = df.select("station", "time", *var_list, *fc_list)
+    skinny = df.select("station", "time", *vars, *flag_cols)
     bad_keys = skinny.groupBy("station").applyInPandas(
         per_station,
         schema="station string, time timestamp, var string",
     ).localCheckpoint(eager=False)
     out = df
-    for v in var_list:
-        flag_col = flag_cols[v]
+    for v, flag_col in zip(vars, flag_cols):
         bk = (
             bad_keys.where(F.col("var") == v)
             .select("station", "time")

@@ -138,42 +138,6 @@ def flag_long_runs(
     return flagged.drop("__pred", "__run", "__span")
 
 
-def detect_spikes(
-    df: DataFrame,
-    key,
-    time_col: str,
-    col: str,
-    crit: Column,
-    max_gap_seconds: int = 12 * 3600,
-    out: str = "is_spike",
-) -> DataFrame:
-    """W6 (single-point form): a row is a spike when the jump into it
-    exceeds ``crit`` and the jump out returns by more than ``crit`` in
-    the opposite direction, with both neighbor gaps ≤ ``max_gap_seconds``.
-
-    ``crit`` is a per-row Column (typically joined from a per-month
-    IQR aggregate — see aggregates.monthly_iqr), mirroring
-    ``crit = ceil(6 * IQR(diff))`` at qaqc_unusual_large_jumps.py:266-283.
-    """
-    w = ordered_window(key, time_col)
-    d_in = F.col(col) - F.lag(col).over(w)
-    d_out = F.lead(col).over(w) - F.col(col)
-    gap_in = F.unix_timestamp(time_col) - F.unix_timestamp(
-        F.lag(time_col).over(w)
-    )
-    gap_out = F.unix_timestamp(F.lead(time_col).over(w)) - F.unix_timestamp(
-        F.col(time_col)
-    )
-    spike = (
-        (F.abs(d_in) > crit)
-        & (F.abs(d_out) > crit)
-        & ((d_in > 0) != (d_out > 0))
-        & (gap_in <= max_gap_seconds)
-        & (gap_out <= max_gap_seconds)
-    )
-    return df.withColumn(out, F.coalesce(spike, F.lit(False)))
-
-
 def detect_spikes_multi(
     df: DataFrame,
     key,

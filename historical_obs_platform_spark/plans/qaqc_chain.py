@@ -46,49 +46,14 @@ for _alias, _src in (
     STRAIGHT_REPEAT_THRESHOLDS[_alias] = STRAIGHT_REPEAT_THRESHOLDS[_src]
 
 
-def value_resolution(df: DataFrame, var: str) -> DataFrame:
+def value_resolution_multi(df: DataFrame, vars) -> DataFrame:
     """A12: per-station reported value resolution — the mode of the
     rounded successive differences of the sorted distinct values
-    (infere_res_var, qaqc_unusual_streaks.py:143-255). Returns
-    (station, resolution_tier) with tier ∈ {1.0, 0.5, 0.1}."""
-    distinct_vals = (
-        df.where(F.col(var).isNotNull())
-        .select("station", F.col(var).alias("__v"))
-        .distinct()
-    )
-    w = Window.partitionBy("station").orderBy("__v")
-    diffs = (
-        distinct_vals.withColumn(
-            "__d", F.round(F.col("__v") - F.lag("__v").over(w), 3)
-        )
-        .where(F.col("__d") > 0)
-    )
-    counts = diffs.groupBy("station", "__d").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    pick = Window.partitionBy("station").orderBy(
-        F.desc("__n"), F.asc("__d")
-    )
-    res = (
-        counts.withColumn("__rk", F.row_number().over(pick))
-        .where(F.col("__rk") == 1)
-        .select(
-            "station",
-            F.when(F.col("__d") >= 1.0, F.lit(1.0))
-            .when(F.col("__d") >= 0.5, F.lit(0.5))
-            .otherwise(F.lit(0.1))
-            .alias("resolution_tier"),
-        )
-    )
-    return res
-
-
-def value_resolution_multi(df: DataFrame, vars) -> DataFrame:
-    """A12 for a variable family in ONE corpus pass: melted distinct
+    (infere_res_var, qaqc_unusual_streaks.py:143-255), tier ∈ {1.0,
+    0.5, 0.1}. One corpus pass for a variable family: melted distinct
     values per (station, var), one diff/mode window chain. Returns
-    (station, __var, resolution_tier). Tier-identical to calling
-    ``value_resolution`` per var — resolution depends only on the
-    variable's raw values, which no check ever modifies."""
+    (station, __var, resolution_tier). A var's tier depends only on
+    its own raw values, which no check ever modifies."""
     structs = [
         F.struct(F.lit(v).alias("var"), F.col(v).alias("v"))
         for v in vars
@@ -132,59 +97,6 @@ def value_resolution_multi(df: DataFrame, vars) -> DataFrame:
     )
 
 
-def spike_check(
-    df: DataFrame,
-    var: str,
-    factor: float = 6.0,
-    min_points: int = 50,
-    max_gap_hours: int = 12,
-) -> DataFrame:
-    """Flag 23: unusual jumps. crit = factor × IQR of first differences
-    per (station, calendar month), months with > min_points only
-    (qaqc_unusual_large_jumps.py:219-299, single-point confirmation
-    form: big jump in, big opposite jump out, neighbor gaps ≤ 12 h)."""
-    if var not in df.columns:
-        return df
-    w = Window.partitionBy("station").orderBy("time")
-    d = df.withColumn("__d", F.col(var) - F.lag(var).over(w)).withColumn(
-        "__month", F.date_trunc("month", F.col("time"))
-    )
-    crit = (
-        d.where(F.col("__d").isNotNull())
-        .groupBy("station", "__month")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.expr("percentile(__d, 0.75) - percentile(__d, 0.25)").alias(
-                "__iqr"
-            ),
-        )
-        .where(F.col("__n") > min_points)
-        .select(
-            "station",
-            "__month",
-            F.ceil(F.lit(factor) * F.col("__iqr")).cast("double").alias("__crit"),
-        )
-    )
-    joined = d.join(crit, ["station", "__month"], "left")
-    flagged = detect_spikes_multi(
-        joined,
-        "station",
-        "time",
-        var,
-        crit=F.col("__crit"),
-        max_gap_seconds=max_gap_hours * 3600,
-        max_len=3,
-        out="__spike",
-    )
-    out = Q.write_flag(
-        flagged,
-        var,
-        F.col("__spike") & F.col("__crit").isNotNull(),
-        Q.FLAG_SPIKE,
-    )
-    return out.drop("__d", "__month", "__crit", "__spike")
-
-
 def spike_check_multi(
     df: DataFrame,
     vars,
@@ -192,14 +104,18 @@ def spike_check_multi(
     min_points: int = 50,
     max_gap_hours: int = 12,
 ) -> DataFrame:
-    """Flag 23 for a whole variable family: ONE window projection
-    computes every variable's first difference, ONE (station, month)
-    aggregation computes every variable's diff-IQR criterion, ONE
-    broadcast join attaches them, then the per-var confirmation logic
-    runs as stacked map layers. Flag-identical to ``spike_check`` per
-    var in sequence (diffs read raw values; write_flag gates on the
-    var's own mask) while touching the corpus once instead of
-    len(vars) times."""
+    """Flag 23: unusual jumps. crit = factor × IQR of first differences
+    per (station, calendar month), months with > min_points only
+    (qaqc_unusual_large_jumps.py:219-299; 1-to-3-point confirmation:
+    big jump in, big opposite jump out, neighbor gaps ≤ 12 h).
+
+    ONE window projection computes every variable's first difference,
+    ONE (station, month) aggregation computes every variable's
+    diff-IQR criterion, ONE broadcast join attaches them, then the
+    per-var confirmation logic runs as stacked map layers. A var's
+    check reads only its own values and flags and writes only its own
+    ``_eraqc`` column, so ``vars=[a, b]`` flags exactly as ``[a]``
+    then ``[b]``."""
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
@@ -264,7 +180,6 @@ def consecutive_streak_check(
     var: str,
     min_count: int = 20,
     min_span_days: float | None = 2.0,
-    use_resolution_thresholds: bool = False,
     resolution: DataFrame | None = None,
 ) -> DataFrame:
     """Flag 28: straight repeated-value streaks — runs of consecutive
@@ -272,60 +187,35 @@ def consecutive_streak_check(
     spanning more than the day threshold
     (qaqc_unusual_streaks.py:573-694).
 
-    With ``use_resolution_thresholds`` the per-variable table keyed by
-    the station's inferred value resolution picks the knobs
-    (:44-122 via ``value_resolution``); otherwise the explicit
-    ``min_count``/``min_span_days`` apply to all stations. Pass
-    ``resolution`` (a (station, resolution_tier) table, e.g. one
-    variable's slice of ``value_resolution_multi``) to reuse a
-    precomputed inference instead of re-scanning the corpus per var.
+    The per-variable table keyed by the station's inferred value
+    resolution picks the thresholds (:44-122); ``min_count`` and
+    ``min_span_days`` apply to stations with no inferred resolution
+    and to variables the table does not list. Pass ``resolution`` (a
+    (station, resolution_tier) table, e.g. one variable's slice of
+    ``value_resolution_multi``) to reuse a precomputed inference
+    instead of re-scanning the corpus per var.
     """
     if var not in df.columns:
         return df
-    if use_resolution_thresholds and var in STRAIGHT_REPEAT_THRESHOLDS:
-        table = STRAIGHT_REPEAT_THRESHOLDS[var]
-        res = (
-            resolution
-            if resolution is not None
-            else value_resolution(df, var)
-        )
-        thresh = res.select(
+    count_lim = F.lit(min_count)
+    days_lim = F.lit(min_span_days if min_span_days is not None else 1e9)
+    work = df
+    if var in STRAIGHT_REPEAT_THRESHOLDS:
+        if resolution is None:
+            resolution = value_resolution_multi(df, [var])
+        tier = F.col("resolution_tier")
+        max_count = max_days = F.lit(None)
+        for t, (cnt, days) in STRAIGHT_REPEAT_THRESHOLDS[var].items():
+            max_count = F.when(tier == t, F.lit(cnt)).otherwise(max_count)
+            max_days = F.when(tier == t, F.lit(days)).otherwise(max_days)
+        thresh = resolution.select(
             "station",
-            *[
-                F.when(
-                    F.col("resolution_tier") == tier,
-                    F.lit(cnt),
-                ).alias(f"__c_{i}")
-                for i, (tier, (cnt, _d)) in enumerate(table.items())
-            ],
-            *[
-                F.when(
-                    F.col("resolution_tier") == tier,
-                    F.lit(days),
-                ).alias(f"__d_{i}")
-                for i, (tier, (_c, days)) in enumerate(table.items())
-            ],
-        ).select(
-            "station",
-            F.coalesce(
-                *[F.col(f"__c_{i}") for i in range(len(table))]
-            ).alias("__max_count"),
-            F.coalesce(
-                *[F.col(f"__d_{i}") for i in range(len(table))]
-            ).alias("__max_days"),
+            max_count.alias("__max_count"),
+            max_days.alias("__max_days"),
         )
         work = df.join(F.broadcast(thresh), "station", "left")
-        count_lim = F.coalesce(F.col("__max_count"), F.lit(min_count))
-        days_lim = F.coalesce(
-            F.col("__max_days"),
-            F.lit(min_span_days if min_span_days is not None else 1e9),
-        )
-    else:
-        work = df
-        count_lim = F.lit(min_count)
-        days_lim = F.lit(
-            min_span_days if min_span_days is not None else 1e9
-        )
+        count_lim = F.coalesce(F.col("__max_count"), count_lim)
+        days_lim = F.coalesce(F.col("__max_days"), days_lim)
     runs = sessionize_runs(work, "station", "time", var, out="__run")
     w_run = Window.partitionBy("station", "__run")
     spans = (
@@ -344,10 +234,9 @@ def consecutive_streak_check(
         | ((F.col("__run_days") > days_lim) & (F.col("__run_len") > 1))
     )
     out = Q.write_flag(spans, var, bad, Q.FLAG_STREAK_CONSECUTIVE)
-    drop = ["__run", "__run_len", "__run_days"]
-    if use_resolution_thresholds and var in STRAIGHT_REPEAT_THRESHOLDS:
-        drop += ["__max_count", "__max_days"]
-    return out.drop(*drop)
+    return out.drop(
+        "__run", "__run_len", "__run_days", "__max_count", "__max_days"
+    )
 
 
 def deaccumulate_precip(df: DataFrame) -> DataFrame:
@@ -388,8 +277,6 @@ def run_qaqc(
     streak_vars=("tas", "tdps", "sfcWind"),
     dist_vars=("tas", "tdps"),
     with_distribution: bool = True,
-    truncate_lineage: bool = True,
-    fuse_families: bool = True,
 ) -> DataFrame:
     """The full chain in reference order (QAQC_pipeline.py:579-965):
 
@@ -415,8 +302,6 @@ def run_qaqc(
         # localCheckpoint materializes the intermediate (the reference
         # re-reads from disk between stages for the same reason); on a
         # cluster, swap for reliable checkpoints or a staging table.
-        if not truncate_lineage:
-            return d
         return d.localCheckpoint(eager=False)
 
     out = Q.ensure_flag_columns(df)
@@ -435,16 +320,11 @@ def run_qaqc(
     out = Q.precip_accum_ordering_check(out)
     out = Q.calm_wind_dir_check(out)
     out = cut(out)
-    if with_distribution and fuse_families:
-        # round-8 family fusion: each check family runs in ONE melted
-        # corpus pass across the variable family instead of one scan
-        # per variable (r6 fused the streak/spike/resolution families;
-        # these fuse the remaining four corpus-sized branches). Flag
-        # output is provably identical to the sequential per-var loop
-        # — see the *_multi docstrings (each var's check reads only
-        # its own values/flags and writes only its own _eraqc).
-        # ``fuse_families=False`` keeps the sequential loop for
-        # same-boot A/B measurement.
+    if with_distribution:
+        # each check family runs in ONE melted corpus pass across the
+        # variable family instead of one scan per variable (each var's
+        # check reads only its own values/flags and writes only its
+        # own _eraqc — see the *_multi docstrings)
         out = D.record_length_bypass_multi(out, dist_vars)
         out = D.frequent_values_multi(out, dist_vars)
         out = D.synergistic_flag_copy(out, "tas", "tdps")
@@ -457,28 +337,6 @@ def run_qaqc(
         out = D.precip_clim_outlier_check(out, "pr")
         out = cut(out)
         out = D.same_hour_streak_multi(out, streak_vars)
-    elif with_distribution:
-        for v in dist_vars:
-            out = D.record_length_bypass(out, v)
-        for v in dist_vars:
-            out = D.frequent_values_check(out, v)
-        out = D.synergistic_flag_copy(out, "tas", "tdps")
-        out = D.precip_frequent_check(out, "pr")
-        for v in dist_vars:
-            out = D.monthly_median_gap_check(out, v)
-        out = D.precip_gap_check(out, "pr")
-        out = cut(out)
-        for v in dist_vars:
-            out = D.distribution_gap_check(out, v)
-        for v in dist_vars:
-            out = D.climatological_outlier_check(out, v)
-        out = D.precip_clim_outlier_check(out, "pr")
-        out = cut(out)
-        # family-fused: one corpus pass for all streak vars (the
-        # sequential per-var loop re-scanned the segment checkpoint
-        # per variable; flags are provably identical — see the multi
-        # variants' docstrings)
-        out = D.same_hour_streak_multi(out, streak_vars)
     # one melted resolution inference for the whole family (resolution
     # reads raw values only, so hoisting it above the per-var flag
     # writes changes nothing)
@@ -489,7 +347,6 @@ def run_qaqc(
         out = consecutive_streak_check(
             out,
             v,
-            use_resolution_thresholds=True,
             resolution=res_all.where(F.col("__var") == v).select(
                 "station", "resolution_tier"
             ),

@@ -293,7 +293,7 @@ def w4_same_hour_streaks(spark, sf_dir):
         .alias("tas"),
     )
     obs = Q.ensure_flag_columns(obs, ["tas"])
-    out = D.same_hour_streak_check(obs, "tas")
+    out = D.same_hour_streak_multi(obs, ["tas"])
     return out.select("station", "time", "tas", "tas_eraqc")
 
 

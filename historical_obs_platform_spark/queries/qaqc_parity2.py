@@ -547,7 +547,7 @@ def w13_clim_outlier(spark, sf_dir):
         (F.lit(285.0) + F.col("value") / 4).alias("tas"),
     )
     obs = Q.ensure_flag_columns(obs, ["tas"])
-    out = D.climatological_outlier_check(obs, "tas", exact_mode=True)
+    out = D.climatological_outlier_multi(obs, ["tas"], exact_mode=True)
     return out.select("station", "time", "tas", "tas_eraqc")
 
 

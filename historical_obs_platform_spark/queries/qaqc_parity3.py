@@ -127,7 +127,7 @@ def f24_frequent_multigranularity(spark, sf_dir):
         .drop("event_id", "value")
     )
     obs = Q.ensure_flag_columns(obs, ["tas"])
-    out = D.frequent_values_check(obs, "tas")
+    out = D.frequent_values_multi(obs, ["tas"])
     return out.select("station", "time", "tas", "tas_eraqc")
 
 
@@ -234,7 +234,7 @@ def f21_monthly_median_gap(spark, sf_dir):
         .drop("event_id", "value")
     )
     obs = Q.ensure_flag_columns(obs, ["tas"])
-    out = D.monthly_median_gap_check(obs, "tas")
+    out = D.monthly_median_gap_multi(obs, ["tas"])
     return out.select("station", "time", "tas", "tas_eraqc")
 
 
@@ -319,7 +319,7 @@ def f22_distribution_gap(spark, sf_dir):
         .drop("event_id", "value")
     )
     obs = Q.ensure_flag_columns(obs, ["tas"])
-    out = D.distribution_gap_check(obs, "tas")
+    out = D.distribution_gap_multi(obs, ["tas"])
     return out.select("station", "time", "tas", "tas_eraqc")
 
 

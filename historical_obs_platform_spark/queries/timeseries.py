@@ -116,8 +116,13 @@ def w6_spike_flags(spark, sf_dir):
         "iqr", F.round("iqr", 6)
     )
     joined = ev.join(iqr, "user_id")
-    flagged = wd.detect_spikes(
-        joined, "user_id", "ts", "value", crit=F.lit(1.5) * F.col("iqr")
+    flagged = wd.detect_spikes_multi(
+        joined,
+        "user_id",
+        "ts",
+        "value",
+        crit=F.lit(1.5) * F.col("iqr"),
+        max_len=1,
     )
     return flagged.where(F.col("is_spike")).select("user_id", "ts", "value")
 

@@ -122,6 +122,22 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else a heap sized to the host: two
+    fifths of physical memory, at most 48 GiB. Local mode runs the
+    executors inside the driver JVM, whose resident set grows past its
+    heap (off-heap buffers, metaspace) while Python workers run beside
+    it, so a heap near the host's RAM gets the JVM OOM-killed."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    with open("/proc/meminfo") as fh:
+        total_kb = int(
+            next(ln for ln in fh if ln.startswith("MemTotal")).split()[1]
+        )
+    return f"{min(48 * 1024, total_kb * 2 // 5 // 1024)}m"
+
+
 def get_spark(app_name: str = "historical_obs_platform_spark") -> SparkSession:
     """Build (or reuse) a session.
 
@@ -135,9 +151,9 @@ def get_spark(app_name: str = "historical_obs_platform_spark") -> SparkSession:
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         # local mode runs executors inside the driver JVM: size the
-        # heap for 32 concurrent tasks + checkpoint/broadcast blocks
+        # heap for concurrent tasks + checkpoint/broadcast blocks
         # across a long query session, not for a thin driver
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # ContextCleaner only reclaims dropped RDD/broadcast/checkpoint

@@ -10,7 +10,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from historical_obs_platform_spark.plans.qaqc_chain import run_qaqc
+from historical_obs_platform_spark.operators import distribution as D
+from historical_obs_platform_spark.operators import qaqc as Q
+from historical_obs_platform_spark.plans.qaqc_chain import (
+    run_qaqc,
+    spike_check_multi,
+)
 
 YEARS = 6
 HOURS = YEARS * 365 * 24
@@ -204,3 +209,108 @@ def test_clean_station_low_false_positive_rate(dist_result):
     clean = res.loc["ST_CLEAN"]
     rate = clean["tas_eraqc"].notna().mean()
     assert rate < 0.005, f"false-flag rate {rate:.4%}"
+
+
+# ------------------------------------------------------------------
+# Family invariant: a variable's check reads only its own values and
+# flags and writes only its own _eraqc column, so one fused call over
+# (tas, tdps) flags exactly as two single-variable calls in sequence.
+# Six Junes per station at 3-hourly cadence keep the frame small (the
+# test's cost grows with rows); each variable carries its own planted
+# defect for every family, on other stations or rows than the other
+# variable's.
+# ------------------------------------------------------------------
+def _june(name, amp=8.0):
+    st = _station(name, amp=amp)
+    t = st["time"]
+    st = st[(t.dt.month == 6) & (t.dt.hour % 3 == 0)].reset_index(drop=True)
+    rng = np.random.RandomState(zlib.crc32(name.encode()) % 2**31 + 1)
+    st["tdps"] = st["tas"] - 5.0 + rng.normal(0, 0.3, len(st))
+    return st
+
+
+def _pin_scattered(st, var, value):
+    st.loc[np.linspace(50, len(st) - 50, 200).astype(int), var] = value
+
+
+def _shift_june(st, var, year, delta=20.0):
+    st.loc[st["time"].dt.year == year, var] += delta
+
+
+def _tail_cluster(st, var):
+    st.loc[np.linspace(10, len(st) - 10, 18).astype(int), var] += 15.0
+
+
+def _night_peaks(st, var):
+    st.loc[(st["time"].dt.hour == 3) & (st["time"].dt.day == 15), var] += 10.0
+
+
+def _same_hour(st, var):
+    t = st["time"]
+    pin = (t.dt.hour == 6) & (t.dt.year == 2020) & (t.dt.day <= 20)
+    st.loc[pin, var] = 280.0
+
+
+def _repeat_day(st, var):
+    days = st["time"].dt.day
+    src = st.loc[(st["time"].dt.year == 2019) & (days == 1), var].to_numpy()
+    for k in range(2, 9):
+        st.loc[(st["time"].dt.year == 2019) & (days == k), var] = src
+
+
+def _two_var_frame():
+    s1, s2, s3 = _june("FV_1"), _june("FV_2", amp=2.0), _june("FV_3", amp=2.0)
+    s4, s5, s6, s7 = _june("FV_4"), _june("FV_5"), _june("FV_6"), _june("FV_7")
+    _pin_scattered(s1, "tas", 320.0)
+    _pin_scattered(s4, "tdps", 300.0)
+    _shift_june(s2, "tas", 2018)
+    _shift_june(s3, "tdps", 2016)
+    _tail_cluster(s3, "tas")
+    _tail_cluster(s2, "tdps")
+    _night_peaks(s4, "tas")
+    _night_peaks(s6, "tdps")
+    _same_hour(s5, "tas")
+    _same_hour(s1, "tdps")
+    _repeat_day(s6, "tas")
+    _repeat_day(s5, "tdps")
+    s1.loc[500, "tas"] += 100.0
+    s2.loc[[700, 701], "tdps"] += 30.0
+    s7.loc[s7["time"].dt.year < 2019, "tas"] = np.nan
+    s5.loc[s5["time"].dt.year < 2019, "tdps"] = np.nan
+    return pd.concat([s1, s2, s3, s4, s5, s6, s7], ignore_index=True)
+
+
+@pytest.fixture(scope="module")
+def two_var_obs(spark):
+    return Q.ensure_flag_columns(spark.createDataFrame(_two_var_frame()))
+
+
+@pytest.mark.parametrize(
+    "family",
+    [
+        D.record_length_bypass_multi,
+        D.frequent_values_multi,
+        D.monthly_median_gap_multi,
+        D.distribution_gap_multi,
+        D.climatological_outlier_multi,
+        D.same_hour_streak_multi,
+        D.whole_day_streak_multi,
+        spike_check_multi,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_family_fused_equals_sequential(two_var_obs, family):
+    cols = ["station", "time", "tas_eraqc", "tdps_eraqc"]
+
+    def flags(df):
+        return (
+            df.select(*cols)
+            .toPandas()
+            .sort_values(["station", "time"], ignore_index=True)
+        )
+
+    fused = flags(family(two_var_obs, ["tas", "tdps"]))
+    seq = flags(family(family(two_var_obs, ["tas"]), ["tdps"]))
+    pd.testing.assert_frame_equal(fused, seq)
+    assert fused["tas_eraqc"].notna().any()
+    assert fused["tdps_eraqc"].notna().any()

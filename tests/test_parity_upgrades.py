@@ -8,8 +8,8 @@ import pytest
 from historical_obs_platform_spark.operators import qaqc as Q
 from historical_obs_platform_spark.plans.qaqc_chain import (
     consecutive_streak_check,
-    spike_check,
-    value_resolution,
+    spike_check_multi,
+    value_resolution_multi,
 )
 
 
@@ -33,7 +33,7 @@ def test_multi_point_spikes(spark):
     pdf.loc[[700, 701, 702], "tas"] += 30.0        # 3-point excursion
     df = Q.ensure_flag_columns(spark.createDataFrame(pdf))
     out = (
-        spike_check(df, "tas")
+        spike_check_multi(df, ["tas"])
         .toPandas()
         .sort_values("time", ignore_index=True)
     )
@@ -49,7 +49,7 @@ def test_resolution_tiers(spark):
     df = spark.createDataFrame(pd.concat([coarse, fine], ignore_index=True))
     res = {
         r.station: r.resolution_tier
-        for r in value_resolution(df, "tas").collect()
+        for r in value_resolution_multi(df, ["tas"]).collect()
     }
     assert res["COARSE"] == 1.0
     assert res["FINE"] == 0.1
@@ -65,9 +65,7 @@ def test_resolution_aware_streak_thresholds(spark):
     df = Q.ensure_flag_columns(
         spark.createDataFrame(pd.concat([coarse, fine], ignore_index=True))
     )
-    out = consecutive_streak_check(
-        df, "tas", use_resolution_thresholds=True
-    ).toPandas()
+    out = consecutive_streak_check(df, "tas").toPandas()
     by_st = out.groupby("station")["tas_eraqc"].apply(
         lambda s: (s == 28).sum()
     )
@@ -79,6 +77,5 @@ def test_resolution_aware_streak_thresholds(spark):
     out2 = consecutive_streak_check(
         Q.ensure_flag_columns(spark.createDataFrame(coarse2)),
         "tas",
-        use_resolution_thresholds=True,
     ).toPandas()
     assert (out2["tas_eraqc"] == 28).sum() == 45
