@@ -18,6 +18,9 @@ requires both flags strictly null.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -141,14 +144,35 @@ def valid_mask(var: str, keep_yellow: bool = True, var2: str | None = None) -> C
     - two-variable: both flags strictly null (the reference's var2
       branch ignores yellow).
     """
+    # one parsed SQL predicate: every check builds this mask per
+    # variable, and the equivalent Column calls cost ~20 round trips
+    # to the JVM each
+    fc = f"`{eraqc(var)}`"
     if var2 is not None:
-        return F.col(eraqc(var)).isNull() & F.col(eraqc(var2)).isNull()
-    m = F.col(eraqc(var)).isNull()
+        return F.expr(f"{fc} IS NULL AND `{eraqc(var2)}` IS NULL")
     if keep_yellow:
-        m = m | F.col(eraqc(var)).isin(
-            FLAG_YELLOW_STATION, FLAG_YELLOW_VARIABLE
+        return F.expr(
+            f"{fc} IS NULL OR {fc} IN "
+            f"({FLAG_YELLOW_STATION}, {FLAG_YELLOW_VARIABLE})"
         )
-    return m
+    return F.expr(f"{fc} IS NULL")
+
+
+def flag_expr(
+    var: str,
+    condition: Column,
+    flag: int,
+    keep_yellow: bool = True,
+    var2: str | None = None,
+    flag_var: str | None = None,
+) -> Column:
+    """The new value of ``<flag_var or var>_eraqc``: ``flag`` where the
+    row is valid for checking AND ``condition`` holds, else unchanged.
+    Data is never deleted — only flagged. A check family writes all its
+    variables' flags in one ``withColumns`` of these."""
+    target = eraqc(flag_var or var)
+    mask = valid_mask(var, keep_yellow, var2) & condition
+    return F.when(mask, F.lit(float(flag))).otherwise(F.col(target))
 
 
 def write_flag(
@@ -160,13 +184,10 @@ def write_flag(
     var2: str | None = None,
     flag_var: str | None = None,
 ) -> DataFrame:
-    """Set ``<flag_var or var>_eraqc = flag`` where the row is valid
-    for checking AND ``condition`` holds; leave other rows untouched.
-    Data is never deleted — only flagged."""
-    target = eraqc(flag_var or var)
-    mask = valid_mask(var, keep_yellow, var2) & condition
+    """``flag_expr`` written to its flag column."""
     return df.withColumn(
-        target, F.when(mask, F.lit(float(flag))).otherwise(F.col(target))
+        eraqc(flag_var or var),
+        flag_expr(var, condition, flag, keep_yellow, var2, flag_var),
     )
 
 
@@ -196,35 +217,37 @@ def normalize_sentinels(
 def world_record_check(df: DataFrame) -> DataFrame:
     """Flag 11: outside per-variable world/regional record range
     (qaqc_wholestation.py:689-842)."""
-    out = df
-    for v in present_vars(df, list(WORLD_RECORD_LIMITS)):
-        lo, hi = WORLD_RECORD_LIMITS[v]
-        out = write_flag(
-            out,
-            v,
-            (F.col(v) < F.lit(lo)) | (F.col(v) > F.lit(hi)),
-            FLAG_WORLD_RECORD,
-        )
-    return out
+    return df.withColumns(
+        {
+            eraqc(v): flag_expr(
+                v,
+                (F.col(v) < F.lit(WORLD_RECORD_LIMITS[v][0]))
+                | (F.col(v) > F.lit(WORLD_RECORD_LIMITS[v][1])),
+                FLAG_WORLD_RECORD,
+            )
+            for v in present_vars(df, list(WORLD_RECORD_LIMITS))
+        }
+    )
 
 
 # ----------------------------------------------------------- L1 supersat
 def supersaturation_check(df: DataFrame) -> DataFrame:
     """Flag 12 on dewpoint where tdps > tas
     (qaqc_logic_checks.py:28-77); only rows valid for BOTH vars."""
-    out = df
     if "tas" not in df.columns:
-        return out
-    for dew in present_vars(df, ["tdps", "tdps_derived"]):
-        out = write_flag(
-            out,
-            "tas",
-            F.col(dew) > F.col("tas"),
-            FLAG_SUPERSATURATION,
-            var2=dew,
-            flag_var=dew,
-        )
-    return out
+        return df
+    return df.withColumns(
+        {
+            eraqc(dew): flag_expr(
+                "tas",
+                F.col(dew) > F.col("tas"),
+                FLAG_SUPERSATURATION,
+                var2=dew,
+                flag_var=dew,
+            )
+            for dew in present_vars(df, ["tdps", "tdps_derived"])
+        }
+    )
 
 
 # ----------------------------------------------------------- L2 wet bulb
@@ -264,10 +287,12 @@ def wetbulb_streak_check(
 def negative_precip_check(df: DataFrame) -> DataFrame:
     """Flag 10: pr < 0, all precip variants
     (qaqc_logic_checks.py:154-208)."""
-    out = df
-    for v in present_vars(df, PRECIP_VARS + ["accum_pr"]):
-        out = write_flag(out, v, F.col(v) < 0, FLAG_NEGATIVE_PRECIP)
-    return out
+    return df.withColumns(
+        {
+            eraqc(v): flag_expr(v, F.col(v) < 0, FLAG_NEGATIVE_PRECIP)
+            for v in present_vars(df, PRECIP_VARS + ["accum_pr"])
+        }
+    )
 
 
 # ------------------------------------------------- L4 precip accumulation
@@ -296,27 +321,16 @@ def precip_accum_ordering_check(df: DataFrame) -> DataFrame:
         ("pr_24h", "pr_1h", F.col("pr_24h") < F.col("pr_1h"), FLAG_PRECIP_LONG_LT_SHORT),
         ("pr_24h", "pr_localmid", F.col("pr_24h") < F.col("pr_localmid"), FLAG_PRECIP_24H_LT_LOCALMID),
     ]
-    # Materialize every pair's (valid-at-entry AND violated) predicate
-    # before any flag write, then apply — order-independent.
-    out = df
-    applicable = [
-        (i, var, cond, flag)
-        for i, (var, other, cond, flag) in enumerate(rules)
-        if var in df.columns and other in df.columns
-    ]
-    for i, var, cond, flag in applicable:
-        other = rules[i][1]
-        out = out.withColumn(
-            f"__pr_viol_{i}", valid_mask(var, var2=other) & cond
-        )
-    for i, var, _cond, flag in applicable:
-        out = out.withColumn(
-            eraqc(var),
-            F.when(F.col(f"__pr_viol_{i}"), F.lit(float(flag))).otherwise(
-                F.col(eraqc(var))
-            ),
-        )
-    return out.drop(*[f"__pr_viol_{i}" for i, *_ in applicable])
+    # One withColumns: every pair's (valid-at-entry AND violated)
+    # predicate reads the entry state; of several pairs flagging one
+    # variable, the later rule's flag wins.
+    flags = {}
+    for var, other, cond, flag in rules:
+        if var in df.columns and other in df.columns:
+            flags[eraqc(var)] = F.when(
+                valid_mask(var, var2=other) & cond, F.lit(float(flag))
+            ).otherwise(flags.get(eraqc(var), F.col(eraqc(var))))
+    return df.withColumns(flags)
 
 
 # ----------------------------------------------------------- L5 calm wind
@@ -334,105 +348,151 @@ def calm_wind_dir_check(df: DataFrame) -> DataFrame:
         & F.col("sfcWind_dir").isNotNull()
     )
     bad_north = valid & (F.col("sfcWind") != 0) & (F.col("sfcWind_dir") == 0)
-    # Materialize the predicates before mutating the columns they read
-    # (a later withColumn would otherwise re-evaluate them against the
-    # already-flagged/rewritten values).
-    out = df.withColumn("__bad_calm", bad_calm).withColumn(
-        "__bad_north", bad_north
+    # one withColumns: both new columns read the entry-state values
+    return df.withColumns(
+        {
+            eraqc("sfcWind_dir"): F.when(
+                bad_calm, F.lit(float(FLAG_CALM_WIND_DIR))
+            )
+            .when(bad_north, F.lit(float(FLAG_WIND_DIR_RESET_360)))
+            .otherwise(F.col(eraqc("sfcWind_dir"))),
+            "sfcWind_dir": F.when(bad_north, F.lit(360.0)).otherwise(
+                F.col("sfcWind_dir")
+            ),
+        }
     )
-    out = out.withColumn(
-        eraqc("sfcWind_dir"),
-        F.when(F.col("__bad_calm"), F.lit(float(FLAG_CALM_WIND_DIR)))
-        .when(F.col("__bad_north"), F.lit(float(FLAG_WIND_DIR_RESET_360)))
-        .otherwise(F.col(eraqc("sfcWind_dir"))),
-    )
-    return out.withColumn(
-        "sfcWind_dir",
-        F.when(F.col("__bad_north"), F.lit(360.0)).otherwise(
-            F.col("sfcWind_dir")
-        ),
-    ).drop("__bad_calm", "__bad_north")
 
 
-# ------------------------------------------------------ pressure units fix
-def pressure_units_fix(df: DataFrame) -> DataFrame:
-    """Per-station heuristic: a pressure column whose station mean is
-    < 10000 is in hPa, not Pa — multiply by 100
-    (qaqc_logic_checks.py:376-414). Per-station aggregate broadcast
-    back as a join (the reference does one station per process; same
-    decision, distributed)."""
+# ------------------------------------------------------ station statistics
+THERMOMETER_COL = "thermometer_height_m"
+ANEMOMETER_COL = "anemometer_height_m"
+
+
+def station_statistics(df: DataFrame) -> DataFrame:
+    """Every whole-station statistic the station checks read, from one
+    two-level aggregate: ``groupBy(station, elevation)`` counts rows and
+    non-null values, sums pressures and takes sensor-height min/max;
+    a ``groupBy(station)`` over those few groups folds them. The
+    elevation statistics come from the second level exactly:
+    ``count(elevation)`` is the distinct count, ``percentile(elevation,
+    0.5, n)`` the frequency-weighted median, ``min(struct(n,
+    -elevation))`` the less frequent (then higher) elevation.
+
+    One row per station; every column but ``station`` is
+    ``__``-prefixed. Checks read only the columns they need, so the
+    optimizer prunes the rest of the aggregate."""
+    cols = set(df.columns)
+    any_data = reduce(
+        or_, [F.col(v).isNotNull() for v in present_vars(df)], F.lit(False)
+    )
+    heights = [c for c in (THERMOMETER_COL, ANEMOMETER_COL) if c in cols]
     ps_vars = present_vars(df, PRESSURE_VARS)
-    if not ps_vars:
-        return df
-    means = df.groupBy("station").agg(
-        *[F.avg(v).alias(f"__mean_{v}") for v in ps_vars]
-    )
-    out = df.join(F.broadcast(means), "station", "left")
-    for v in ps_vars:
-        out = out.withColumn(
-            v,
+    latlon = [c for c in ("lat", "lon") if c in cols]
+    per_elev = [
+        F.count(F.lit(1)).alias("__n"),
+        F.count(F.when(any_data, 1)).alias("__n_any"),
+        *[F.count(c).alias(f"__n_{c}") for c in latlon + heights],
+        *[F.min(c).alias(f"__hmin_{c}") for c in heights],
+        *[F.max(c).alias(f"__hmax_{c}") for c in heights],
+        *[F.sum(v).alias(f"__sum_{v}") for v in ps_vars],
+        *[F.count(v).alias(f"__n_{v}") for v in ps_vars],
+    ]
+    per_station = [
+        F.sum("__n_any").alias("__n_any"),
+        *[
+            (F.sum(f"__n_{c}") if c in latlon else F.lit(0)).alias(f"__n_{c}")
+            for c in ("lat", "lon")
+        ],
+        *[
+            (F.sum(f"__n_{c}") < F.sum("__n")).alias(f"__hmiss_{c}")
+            for c in heights
+        ],
+        *[F.min(f"__hmin_{c}").alias(f"__hmin_{c}") for c in heights],
+        *[F.max(f"__hmax_{c}").alias(f"__hmax_{c}") for c in heights],
+        *[
+            (F.sum(f"__sum_{v}") / F.sum(f"__n_{v}")).alias(f"__mean_{v}")
+            for v in ps_vars
+        ],
+    ]
+    keys = ["station"]
+    if "elevation" in cols:
+        keys.append("elevation")
+        e = F.col("elevation")
+        minority = F.min(
             F.when(
-                F.col(f"__mean_{v}") < 10000, F.col(v) * F.lit(100.0)
-            ).otherwise(F.col(v)),
-        ).drop(f"__mean_{v}")
-    return out
+                e.isNotNull(),
+                F.struct(F.col("__n").alias("n"), (-e).alias("neg")),
+            )
+        )
+        per_station += [
+            F.count(e).alias("__n_elev"),
+            (F.max(e) - F.min(e)).alias("__elev_range"),
+            F.expr("percentile(elevation, 0.5, __n)").alias("__elev_med"),
+            (-minority.getField("neg")).alias("__minority_elev"),
+        ]
+    else:
+        per_station.append(F.lit(None).cast("double").alias("__elev_med"))
+    return (
+        df.groupBy(*keys)
+        .agg(*per_elev)
+        .groupBy("station")
+        .agg(*per_station)
+    )
 
 
-# --------------------------------------------------- L8 elevation consistency
-def elevation_consistency_check(df: DataFrame, tolerance_m: float = 50.0) -> DataFrame:
-    """Flag 36: a station reporting > 2 distinct elevations whose range
-    exceeds 50 m gets values beyond median±50 m flagged; exactly 2
-    distinct values flags the minority value
-    (qaqc_wholestation.py:318-392)."""
-    if "elevation" not in df.columns:
-        return df
-    stats = df.groupBy("station").agg(
-        F.countDistinct("elevation").alias("__n_elev"),
-        (F.max("elevation") - F.min("elevation")).alias("__elev_range"),
-        F.expr("percentile(elevation, 0.5)").alias("__elev_median"),
-    )
-    # minority value for the ==2 case: the less frequent elevation
-    counts = (
-        df.where(F.col("elevation").isNotNull())
-        .groupBy("station", "elevation")
-        .count()
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("station").orderBy(F.asc("count"), F.desc("elevation"))
-    minority = (
-        counts.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") == 1)
-        .select("station", F.col("elevation").alias("__minority_elev"))
-    )
-    out = (
-        df.join(F.broadcast(stats), "station", "left")
-        .join(F.broadcast(minority), "station", "left")
-    )
-    many = (
-        (F.col("__n_elev") > 2)
-        & (F.col("__elev_range") > tolerance_m)
-        & (
-            F.abs(F.col("elevation") - F.col("__elev_median"))
-            > F.lit(tolerance_m)
+def _reject_reason(elev_range: tuple[float, float]) -> Column:
+    med = F.col("__elev_med")
+    return (
+        F.when(F.col("__n_any") == 0, "no_data_vars")
+        .when(
+            (F.col("__n_lat") == 0) | (F.col("__n_lon") == 0),
+            "missing_latlon",
+        )
+        .when(
+            med.isNotNull()
+            & ((med < elev_range[0]) | (med > elev_range[1])),
+            "elevation_out_of_range",
         )
     )
-    two = (
-        (F.col("__n_elev") == 2)
-        & (F.col("__elev_range") > tolerance_m)
-        & (F.col("elevation") == F.col("__minority_elev"))
+
+
+# ------------------------------------------------------- P3 station gates
+STATION_ELEV_RANGE = (-95.0, 6210.0)
+
+
+def station_gates(
+    df: DataFrame, elev_range: tuple[float, float] = STATION_ELEV_RANGE
+) -> DataFrame:
+    """Whole-station eligibility gates (qaqc_wholestation.py:56-110,
+    199-228, 537-574): a station is rejected when it has no data
+    variables, all-null lat/lon, or median elevation outside
+    [-95, 6210] m. Returns (station, reject_reason) of the rejected
+    stations; ``drop_rejected_stations`` applies the same rule inside
+    ``station_checks``."""
+    return (
+        station_statistics(df)
+        .select("station", _reject_reason(elev_range).alias("reject_reason"))
+        .where(F.col("reject_reason").isNotNull())
     )
-    out = write_flag(out, "elevation", many | two, FLAG_ELEV_RANGE)
-    return out.drop("__n_elev", "__elev_range", "__elev_median", "__minority_elev")
+
+
+def drop_rejected_stations(df: DataFrame) -> DataFrame:
+    """Keep the rows of stations that pass the gates of
+    ``station_gates``.
+
+    A ``station_checks`` step: it reads the ``station_statistics``
+    columns ``__n_any``, ``__n_lat``, ``__n_lon`` and ``__elev_med``
+    that ``station_checks`` joins in, so call it as
+    ``station_checks(df, [drop_rejected_stations])``; on a bare frame
+    those columns do not resolve."""
+    return df.where(_reject_reason(STATION_ELEV_RANGE).isNull())
 
 
 # ------------------------------------------------- sensor-height gates
-def sensor_height_check(
-    df: DataFrame,
-    thermometer_col: str = "thermometer_height_m",
-    anemometer_col: str = "anemometer_height_m",
-    tolerance_m: float = 1.0 / 3.0,
-) -> DataFrame:
+HEIGHT_TOLERANCE_M = 1.0 / 3.0
+
+
+def sensor_height_check(df: DataFrame) -> DataFrame:
     """Flags 6/7/8/9 (qaqc_sensor_height_t / qaqc_sensor_height_w,
     qaqc_wholestation.py:579-689): whole-station gates on instrument
     mounting height —
@@ -443,112 +503,122 @@ def sensor_height_check(
       flag 8; present but outside 10 m ± ⅓ m → 9 on both.
 
     The reference runs one station per process and assigns the scalar
-    flag to the whole column; here one per-station aggregate (any-null
-    + min/max within band) broadcasts back onto the observations —
-    same decision, one shuffle, no per-row height comparison repeated
-    after the join.
-    """
-    checks = []  # (height_col, lo, hi, missing_flag, range_flag, targets)
-    if thermometer_col in df.columns and "tas" in df.columns:
-        checks.append(
-            (
-                thermometer_col,
-                2.0 - tolerance_m,
-                2.0 + tolerance_m,
-                FLAG_THERMOMETER_MISSING,
-                FLAG_THERMOMETER_HEIGHT,
-                ["tas"],
-            )
+    flag to the whole column; here it is a projection over the
+    station's any-null, min and max of the height. Missing takes
+    precedence: a row flagged 6/8 is no longer valid for the
+    out-of-band test.
+
+    A ``station_checks`` step: it reads the ``station_statistics``
+    columns ``__hmiss_*``, ``__hmin_*`` and ``__hmax_*`` that
+    ``station_checks`` joins in, so call it as
+    ``station_checks(df, [sensor_height_check])``; on a bare frame
+    those columns do not resolve."""
+    wind = [v for v in ("sfcWind", "sfcWind_dir") if v in df.columns]
+    checks = [
+        (col, nominal, missing_flag, range_flag, targets)
+        for col, nominal, missing_flag, range_flag, targets in (
+            (THERMOMETER_COL, 2.0, FLAG_THERMOMETER_MISSING,
+             FLAG_THERMOMETER_HEIGHT,
+             ["tas"] if "tas" in df.columns else []),
+            (ANEMOMETER_COL, 10.0, FLAG_ANEMOMETER_MISSING,
+             FLAG_ANEMOMETER_HEIGHT, wind),
         )
-    wind_targets = [
-        v for v in ("sfcWind", "sfcWind_dir") if v in df.columns
+        if col in df.columns and targets
     ]
-    if anemometer_col in df.columns and wind_targets:
-        checks.append(
-            (
-                anemometer_col,
-                10.0 - tolerance_m,
-                10.0 + tolerance_m,
-                FLAG_ANEMOMETER_MISSING,
-                FLAG_ANEMOMETER_HEIGHT,
-                wind_targets,
-            )
-        )
     if not checks:
         return df
-
-    out = ensure_flag_columns(
-        df, [t for _c, _l, _h, _m, _r, ts in checks for t in ts]
-    )
-    aggs = []
-    for col, lo, hi, *_ in checks:
-        aggs.append(
-            (F.count(F.lit(1)) > F.count(col)).alias(f"__miss_{col}")
+    out = ensure_flag_columns(df, [t for *_, ts in checks for t in ts])
+    flags = {}
+    for col, nominal, missing_flag, range_flag, targets in checks:
+        lo, hi = nominal - HEIGHT_TOLERANCE_M, nominal + HEIGHT_TOLERANCE_M
+        within = (F.col(f"__hmin_{col}") >= lo) & (
+            F.col(f"__hmax_{col}") <= hi
         )
-        aggs.append(
-            ((F.min(col) >= lo) & (F.max(col) <= hi)).alias(
-                f"__within_{col}"
-            )
-        )
-    gates = df.groupBy("station").agg(*aggs)
-    out = out.join(F.broadcast(gates), "station", "left")
-    for col, _lo, _hi, missing_flag, range_flag, targets in checks:
         for t in targets:
-            # two write_flag compositions: missing-height first, then
-            # out-of-band — the second call's valid_mask sees the
-            # first flag and skips those rows, so missing keeps
-            # precedence (write_flag owns the valid-mask/precedence
-            # semantics in one place)
-            out = write_flag(
-                out, t, F.col(f"__miss_{col}"), missing_flag
+            valid = valid_mask(t)
+            flags[eraqc(t)] = (
+                F.when(
+                    valid & F.col(f"__hmiss_{col}"), F.lit(float(missing_flag))
+                )
+                .when(valid & ~within, F.lit(float(range_flag)))
+                .otherwise(F.col(eraqc(t)))
             )
-            out = write_flag(
-                out, t, ~F.col(f"__within_{col}"), range_flag
-            )
-    return out.drop(
-        *[f"__miss_{c}" for c, *_ in checks],
-        *[f"__within_{c}" for c, *_ in checks],
-    )
+    return out.withColumns(flags)
 
 
-# ------------------------------------------------------- P3 station gates
-def station_gates(
-    df: DataFrame,
-    elev_range: tuple[float, float] = (-95.0, 6210.0),
-) -> DataFrame:
-    """Whole-station eligibility gates (qaqc_wholestation.py:56-110,
-    199-228, 537-574): a station is rejected when it has no data
-    variables, all-null lat/lon, or median elevation outside
-    [-95, 6210] m. Returns (station, reject_reason); gating the obs
-    table is a broadcast anti-join against the rejects."""
-    data_vars = present_vars(df)
-    any_data = F.greatest(
-        *[F.count(v) for v in data_vars] if data_vars else [F.lit(0)]
-    )
-    gates = df.groupBy("station").agg(
-        any_data.alias("__n_any"),
-        F.count("lat").alias("__n_lat"),
-        F.count("lon").alias("__n_lon"),
-        F.expr("percentile(elevation, 0.5)").alias("__elev_med")
-        if "elevation" in df.columns
-        else F.lit(None).alias("__elev_med"),
-    )
-    return gates.select(
-        "station",
-        F.when(F.col("__n_any") == 0, "no_data_vars")
-        .when((F.col("__n_lat") == 0) | (F.col("__n_lon") == 0), "missing_latlon")
-        .when(
-            F.col("__elev_med").isNotNull()
-            & (
-                (F.col("__elev_med") < elev_range[0])
-                | (F.col("__elev_med") > elev_range[1])
-            ),
-            "elevation_out_of_range",
+# --------------------------------------------------- L8 elevation consistency
+ELEV_TOLERANCE_M = 50.0
+
+
+def elevation_consistency_check(df: DataFrame) -> DataFrame:
+    """Flag 36: a station reporting > 2 distinct elevations whose range
+    exceeds 50 m gets values beyond median±50 m flagged; exactly 2
+    distinct values flags the minority value
+    (qaqc_wholestation.py:318-392).
+
+    A ``station_checks`` step: it reads the ``station_statistics``
+    columns ``__n_elev``, ``__elev_range``, ``__elev_med`` and
+    ``__minority_elev`` that ``station_checks`` joins in, so call it as
+    ``station_checks(df, [elevation_consistency_check])``; on a bare
+    frame those columns do not resolve."""
+    if "elevation" not in df.columns:
+        return df
+    wide = F.col("__elev_range") > ELEV_TOLERANCE_M
+    many = (
+        (F.col("__n_elev") > 2)
+        & wide
+        & (
+            F.abs(F.col("elevation") - F.col("__elev_med"))
+            > F.lit(ELEV_TOLERANCE_M)
         )
-        .alias("reject_reason"),
-    ).where(F.col("reject_reason").isNotNull())
+    )
+    two = (
+        (F.col("__n_elev") == 2)
+        & wide
+        & (F.col("elevation") == F.col("__minority_elev"))
+    )
+    return write_flag(df, "elevation", many | two, FLAG_ELEV_RANGE)
 
 
-def apply_station_gates(df: DataFrame, gates: DataFrame) -> DataFrame:
-    """Drop rejected stations via broadcast anti-join."""
-    return df.join(F.broadcast(gates.select("station")), "station", "left_anti")
+# ------------------------------------------------------ pressure units fix
+def pressure_units_fix(df: DataFrame) -> DataFrame:
+    """Per-station heuristic: a pressure column whose station mean is
+    < 10000 is in hPa, not Pa — multiply by 100
+    (qaqc_logic_checks.py:376-414); the reference does one station per
+    process, this is the same decision, distributed.
+
+    A ``station_checks`` step: it reads the ``station_statistics``
+    columns ``__mean_<var>`` that ``station_checks`` joins in, so call
+    it as ``station_checks(df, [pressure_units_fix])``; on a bare frame
+    those columns do not resolve."""
+    return df.withColumns(
+        {
+            v: F.when(
+                F.col(f"__mean_{v}") < 10000, F.col(v) * F.lit(100.0)
+            ).otherwise(F.col(v))
+            for v in present_vars(df, PRESSURE_VARS)
+        }
+    )
+
+
+# ------------------------------------------------------- station checks
+STATION_CHECKS = (
+    drop_rejected_stations,
+    sensor_height_check,
+    elevation_consistency_check,
+    pressure_units_fix,
+)
+
+
+def station_checks(df: DataFrame, checks=STATION_CHECKS) -> DataFrame:
+    """Run whole-station checks, in order, as projections over ONE
+    broadcast join of ``station_statistics``: the statistics are
+    computed once, before any check. That is exact for the chain's
+    order: gating drops whole stations, the height and elevation checks
+    only write flags, and only the pressure fix (last) rewrites the
+    values a statistic reads."""
+    stats = station_statistics(df)
+    out = df.join(F.broadcast(stats), "station", "left")
+    for check in checks:
+        out = check(out)
+    return out.drop(*[c for c in stats.columns if c != "station"])

@@ -142,62 +142,86 @@ def detect_spikes_multi(
     df: DataFrame,
     key,
     time_col: str,
-    col: str,
-    crit: Column,
+    series,
     max_gap_seconds: int = 12 * 3600,
     max_len: int = 3,
-    out: str = "is_spike",
 ) -> DataFrame:
     """W6 full form: 1-to-``max_len``-point spikes
     (qaqc_unusual_large_jumps.py:128-216): the jump into the first
     spike point exceeds ``crit``; diffs between spike points stay
     below crit/2 (the excursion holds level); the exit jump exceeds
     ``crit`` with the opposite sign; all neighbor gaps ≤ 12 h. Every
-    row inside the excursion is marked."""
+    row inside the excursion is marked.
+
+    ``series`` lists ``(col, crit, out)``: a boolean ``out`` column is
+    added per value column, tested against its own ``crit`` Column.
+    Window functions are not shared between the expressions that use
+    them, so every lead/lag a test reads (the time and each value
+    column at offsets -1 and 1..``max_len``) is computed ONCE, as a
+    column, in one window select; the tests are then a plain
+    projection, and the marks a second window select."""
     w = ordered_window(key, time_col)
-    v = F.col(col)
-    t = F.unix_timestamp(time_col)
+    offsets = [o for o in range(-1, max_len + 1) if o != 0]
 
-    def dv(i):  # diff between offset i and i-1 (0 = entry jump)
-        a = F.lead(v, i).over(w) if i > 0 else v
-        b = F.lead(v, i - 1).over(w) if i > 1 else (v if i == 1 else F.lag(v).over(w))
-        return a - b
+    def name(base: str, o: int) -> str:
+        return f"{base}_{'m' if o < 0 else 'p'}{abs(o)}"
 
-    def gap(i):  # seconds between offset i and i-1
-        a = F.lead(t, i).over(w) if i > 0 else t
-        b = F.lead(t, i - 1).over(w) if i > 1 else (t if i == 1 else F.lag(t).over(w))
-        return a - b
+    bases = [("__t", F.unix_timestamp(time_col))] + [
+        (f"__v_{out}", F.col(col)) for col, _crit, out in series
+    ]
+    shifted = df.select(
+        "*",
+        *[
+            (F.lag(c).over(w) if o < 0 else F.lead(c, o).over(w)).alias(
+                name(base, o)
+            )
+            for base, c in bases
+            for o in offsets
+        ],
+    )
 
-    d_in = dv(0)
+    def at(base: str, c: Column) -> dict:  # offset -> c at that offset
+        return {o: c if o == 0 else F.col(name(base, o)) for o in [0] + offsets}
+
+    t = at(*bases[0])
+    # index i compares offset i with offset i-1 (i = 0: the entry step)
+    gap_ok = [t[i] - t[i - 1] <= max_gap_seconds for i in range(max_len + 1)]
     starts = []
-    for L in range(1, max_len + 1):
-        cond = (F.abs(d_in) > crit) & (gap(0) <= max_gap_seconds)
-        for j in range(1, L):
-            cond = (
-                cond
-                & (F.abs(dv(j)) <= crit / 2)
-                & (gap(j) <= max_gap_seconds)
+    for (base, c), (_col, crit, out) in zip(bases[1:], series):
+        v = at(base, c)
+        dv = [v[i] - v[i - 1] for i in range(max_len + 1)]
+        size = [F.abs(d) for d in dv]
+        big = [s > crit for s in size]
+        up = [d > 0 for d in dv]
+        half = crit / 2
+        held = big[0] & gap_ok[0]
+        for L in range(1, max_len + 1):
+            # non-null, so the marks below need no per-offset coalesce
+            starts.append(
+                F.coalesce(
+                    held & big[L] & (up[0] != up[L]) & gap_ok[L], F.lit(False)
+                ).alias(f"__sp{L}_{out}")
             )
-        d_out = dv(L)
-        cond = (
-            cond
-            & (F.abs(d_out) > crit)
-            & ((d_in > 0) != (d_out > 0))
-            & (gap(L) <= max_gap_seconds)
-        )
-        # exclude shorter patterns being re-detected inside longer
-        # ones is unnecessary: marks are OR'd row-wise below
-        starts.append(cond.alias(f"__sp{L}"))
+            held = held & (size[L] <= half) & gap_ok[L]
 
-    marked = df.select("*", *starts)
-    flag = F.lit(False)
-    for L in range(1, max_len + 1):
-        for o in range(L):
-            flag = flag | F.coalesce(
-                F.lag(F.col(f"__sp{L}"), o).over(w), F.lit(False)
-            )
-    return marked.withColumn(out, flag).drop(
-        *[f"__sp{L}" for L in range(1, max_len + 1)]
+    marked = shifted.select("*", *starts)
+    marks = {}
+    for _col, _crit, out in series:
+        # a row is in a spike when an L-point pattern starts at most
+        # L-1 rows before it; marks are OR'd row-wise
+        flag = F.lit(False)
+        for L in range(1, max_len + 1):
+            sp = F.col(f"__sp{L}_{out}")
+            for o in range(L):
+                flag = flag | (sp if o == 0 else F.lag(sp, o, False).over(w))
+        marks[out] = flag
+    return marked.withColumns(marks).drop(
+        *[name(base, o) for base, _c in bases for o in offsets],
+        *[
+            f"__sp{L}_{out}"
+            for _col, _crit, out in series
+            for L in range(1, max_len + 1)
+        ],
     )
 
 

@@ -126,32 +126,35 @@ def hourly_standardize(df: DataFrame) -> DataFrame:
 
 def flag_counts(df: DataFrame) -> DataFrame:
     """A6 (merge_eraqc_counts.py:22-157): long-format flag accounting —
-    one row per (station, variable, flag, n). Hourly comma-joined flag
-    strings are exploded back to individual codes first."""
+    one row per (station, variable, flag, n). One scan explodes an
+    array of (variable, flag string) structs, one per ``_eraqc``
+    column, then the comma-joined hourly flag strings back to
+    individual codes."""
     flag_cols = [c for c in df.columns if c.endswith("_eraqc")]
-    parts = []
-    for fc in flag_cols:
-        var = fc[: -len("_eraqc")]
-        col = F.col(fc).cast("string")
-        exploded = (
-            df.select(
-                "station",
-                F.explode(F.split(col, ",")).alias("flag"),
-            )
-            .where(F.col("flag").isNotNull() & (F.col("flag") != ""))
-            .withColumn("variable", F.lit(var))
-        )
-        parts.append(exploded)
-    if not parts:
+    if not flag_cols:
         raise ValueError("no _eraqc columns present")
-    from functools import reduce
-
-    all_flags = reduce(lambda a, b: a.unionByName(b), parts)
+    per_var = F.array(
+        *[
+            F.struct(
+                F.lit(fc[: -len("_eraqc")]).alias("variable"),
+                F.col(fc).cast("string").alias("flags"),
+            )
+            for fc in flag_cols
+        ]
+    )
     return (
-        all_flags.withColumn(
-            "flag", F.col("flag").cast("double").cast("int")
+        df.select("station", F.inline(per_var))
+        .select(
+            "station",
+            "variable",
+            F.explode(F.split("flags", ",")).alias("flag"),
         )
-        .groupBy("station", "variable", "flag")
+        .where(F.col("flag").isNotNull() & (F.col("flag") != ""))
+        .groupBy(
+            "station",
+            "variable",
+            F.col("flag").cast("double").cast("int").alias("flag"),
+        )
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -176,20 +179,23 @@ def select_public_columns(df: DataFrame) -> DataFrame:
 def network_flag_rates(counts: DataFrame) -> DataFrame:
     """A6 roll-ups (qaqc_generate_flag_rates.py:96-231 /
     qaqc_success_report_tables.py:150-311): station-level flag counts
-    rolled up per (network, variable, flag) and per (variable, flag)
-    — sequential grouped sums, network derived from the station id."""
-    with_net = counts.withColumn(
-        "network", F.split(F.col("station"), "_").getItem(0)
+    rolled up per (network, variable, flag) and per (variable, flag),
+    the latter under network ``ALL`` — one grouping-sets aggregate,
+    network derived from the station id."""
+    keys = ["network", "variable", "flag"]
+    return (
+        counts.withColumn("network", F.split(F.col("station"), "_").getItem(0))
+        .groupingSets([keys, keys[1:]], *keys)
+        .agg(F.sum("n").alias("n"), F.grouping("network").alias("__all"))
+        .select(
+            F.when(F.col("__all") == 1, F.lit("ALL"))
+            .otherwise(F.col("network"))
+            .alias("network"),
+            "variable",
+            "flag",
+            "n",
+        )
     )
-    per_network = with_net.groupBy("network", "variable", "flag").agg(
-        F.sum("n").alias("n")
-    )
-    total = (
-        with_net.groupBy("variable", "flag")
-        .agg(F.sum("n").alias("n"))
-        .withColumn("network", F.lit("ALL"))
-    )
-    return per_network.unionByName(total.select("network", "variable", "flag", "n"))
 
 
 def run_merge(df: DataFrame) -> DataFrame:

@@ -5,10 +5,22 @@ over all stations.
 Order matters and is data semantics, not an optimization
 (QAQC_pipeline.py:830): earlier flags exclude rows from later checks
 via the valid mask. The whole chain is one Catalyst DAG — stations are
-partitions, not processes; Catalyst fuses the per-variable ``when``
-projections (CollapseProject), and the only shuffles are the
-per-station aggregates (pressure fix, elevation stats, gates) and the
-window passes.
+partitions, not processes. Each check family reads the rows in a fixed
+number of passes, whatever the number of variables it covers:
+
+- the whole-station checks (gates, sensor heights, elevation
+  consistency, pressure units) are projections over ONE broadcast
+  station-statistics table (``qaqc.station_checks``);
+- the row-local logic checks write all their variables' flags in one
+  ``withColumns`` each, which Catalyst collapses into few projections;
+- the consecutive-streak and spike families share ordered
+  ``(station, time)`` windows across their variables
+  (``consecutive_streak_multi``, ``spike_check_multi``), plus one
+  small broadcast join each (resolution tiers, monthly criteria).
+
+Per-row work inside window operators costs more here than exchanges
+or job launches, so the chain keeps the number of passes over the rows
+small rather than replacing its aggregates by station windows.
 """
 
 from __future__ import annotations
@@ -18,8 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import qaqc as Q
-from ..operators.aggregates import group_iqr
-from ..operators.windows import detect_spikes_multi, sessionize_runs
+from ..operators.windows import deaccumulate, detect_spikes_multi
 
 # Straight-repeat streak thresholds keyed by inferred value resolution
 # (qaqc_unusual_streaks.py:44-122): (max_count, max_days) — a run
@@ -109,10 +120,11 @@ def spike_check_multi(
     (qaqc_unusual_large_jumps.py:219-299; 1-to-3-point confirmation:
     big jump in, big opposite jump out, neighbor gaps ≤ 12 h).
 
-    ONE window projection computes every variable's first difference,
-    ONE (station, month) aggregation computes every variable's
-    diff-IQR criterion, ONE broadcast join attaches them, then the
-    per-var confirmation logic runs as stacked map layers. A var's
+    ONE window select computes every variable's first difference,
+    ONE (station, month) aggregation every variable's diff-IQR
+    criterion, ONE broadcast join attaches them, and
+    ``detect_spikes_multi`` tests every variable in two more window
+    selects; the flags are written in one ``withColumns``. A var's
     check reads only its own values and flags and writes only its own
     ``_eraqc`` column, so ``vars=[a, b]`` flags exactly as ``[a]``
     then ``[b]``."""
@@ -120,10 +132,12 @@ def spike_check_multi(
     if not vars:
         return df
     w = Window.partitionBy("station").orderBy("time")
-    d = df
-    for v in vars:
-        d = d.withColumn(f"__d_{v}", F.col(v) - F.lag(v).over(w))
-    d = d.withColumn("__month", F.date_trunc("month", F.col("time")))
+    d = df.withColumns(
+        {
+            **{f"__d_{v}": F.col(v) - F.lag(v).over(w) for v in vars},
+            "__month": F.date_trunc("month", F.col("time")),
+        }
+    )
     aggs = []
     for v in vars:
         aggs.append(F.count(f"__d_{v}").alias(f"__n_{v}"))
@@ -149,38 +163,35 @@ def spike_check_multi(
             ],
         )
     )
-    out = d.join(F.broadcast(crit), ["station", "__month"], "left")
-    for v in vars:
-        out = detect_spikes_multi(
-            out,
-            "station",
-            "time",
-            v,
-            crit=F.col(f"__crit_{v}"),
-            max_gap_seconds=max_gap_hours * 3600,
-            max_len=3,
-            out=f"__spike_{v}",
-        )
-        out = Q.write_flag(
-            out,
-            v,
-            F.col(f"__spike_{v}") & F.col(f"__crit_{v}").isNotNull(),
-            Q.FLAG_SPIKE,
-        )
+    out = detect_spikes_multi(
+        d.join(F.broadcast(crit), ["station", "__month"], "left"),
+        "station",
+        "time",
+        [(v, F.col(f"__crit_{v}"), f"__spike_{v}") for v in vars],
+        max_gap_seconds=max_gap_hours * 3600,
+        max_len=3,
+    )
+    out = out.withColumns(
+        {
+            Q.eraqc(v): Q.flag_expr(
+                v,
+                F.col(f"__spike_{v}") & F.col(f"__crit_{v}").isNotNull(),
+                Q.FLAG_SPIKE,
+            )
+            for v in vars
+        }
+    )
     return out.drop(
         "__month",
-        *[f"__d_{v}" for v in vars],
-        *[f"__crit_{v}" for v in vars],
-        *[f"__spike_{v}" for v in vars],
+        *[f"__{p}_{v}" for p in ("d", "crit", "spike") for v in vars],
     )
 
 
-def consecutive_streak_check(
+def consecutive_streak_multi(
     df: DataFrame,
-    var: str,
+    vars,
     min_count: int = 20,
     min_span_days: float | None = 2.0,
-    resolution: DataFrame | None = None,
 ) -> DataFrame:
     """Flag 28: straight repeated-value streaks — runs of consecutive
     identical non-null values longer than the count threshold OR
@@ -190,52 +201,87 @@ def consecutive_streak_check(
     The per-variable table keyed by the station's inferred value
     resolution picks the thresholds (:44-122); ``min_count`` and
     ``min_span_days`` apply to stations with no inferred resolution
-    and to variables the table does not list. Pass ``resolution`` (a
-    (station, resolution_tier) table, e.g. one variable's slice of
-    ``value_resolution_multi``) to reuse a precomputed inference
-    instead of re-scanning the corpus per var.
-    """
-    if var not in df.columns:
+    and to variables the table does not list.
+
+    Every variable shares the passes: one broadcast join of the
+    resolution tiers pivoted to (station, __tier_<var>…); one ordered
+    window select finds each variable's run starts and ends (value
+    differs from the previous / next row); one running window carries
+    each run's start row and time forward and one reversed running
+    window carries its end back, so run length and span need no
+    per-run window. The flags are written in one ``withColumns``. A
+    var's check reads only its own values and flags and writes only its
+    own ``_eraqc`` column, so ``vars=[a, b]`` flags exactly as ``[a]``
+    then ``[b]``."""
+    vars = [v for v in vars if v in df.columns]
+    if not vars:
         return df
-    count_lim = F.lit(min_count)
-    days_lim = F.lit(min_span_days if min_span_days is not None else 1e9)
+    default_days = min_span_days if min_span_days is not None else 1e9
+    count_lim = {v: F.lit(min_count) for v in vars}
+    days_lim = {v: F.lit(default_days) for v in vars}
     work = df
-    if var in STRAIGHT_REPEAT_THRESHOLDS:
-        if resolution is None:
-            resolution = value_resolution_multi(df, [var])
-        tier = F.col("resolution_tier")
-        max_count = max_days = F.lit(None)
-        for t, (cnt, days) in STRAIGHT_REPEAT_THRESHOLDS[var].items():
-            max_count = F.when(tier == t, F.lit(cnt)).otherwise(max_count)
-            max_days = F.when(tier == t, F.lit(days)).otherwise(max_days)
-        thresh = resolution.select(
-            "station",
-            max_count.alias("__max_count"),
-            max_days.alias("__max_days"),
+    tiered = [v for v in vars if v in STRAIGHT_REPEAT_THRESHOLDS]
+    if tiered:
+        tiers = value_resolution_multi(df, tiered).groupBy("station").agg(
+            *[
+                F.max(
+                    F.when(F.col("__var") == v, F.col("resolution_tier"))
+                ).alias(f"__tier_{v}")
+                for v in tiered
+            ]
         )
-        work = df.join(F.broadcast(thresh), "station", "left")
-        count_lim = F.coalesce(F.col("__max_count"), count_lim)
-        days_lim = F.coalesce(F.col("__max_days"), days_lim)
-    runs = sessionize_runs(work, "station", "time", var, out="__run")
-    w_run = Window.partitionBy("station", "__run")
-    spans = (
-        runs.withColumn("__run_len", F.count(F.lit(1)).over(w_run))
-        .withColumn(
-            "__run_days",
-            (
-                F.unix_timestamp(F.max("time").over(w_run))
-                - F.unix_timestamp(F.min("time").over(w_run))
-            )
-            / F.lit(86400.0),
+        work = df.join(F.broadcast(tiers), "station", "left")
+        for v in tiered:
+            tier = F.col(f"__tier_{v}")
+            max_count = max_days = F.lit(None)
+            for t, (cnt, days) in STRAIGHT_REPEAT_THRESHOLDS[v].items():
+                max_count = F.when(tier == t, F.lit(cnt)).otherwise(max_count)
+                max_days = F.when(tier == t, F.lit(days)).otherwise(max_days)
+            count_lim[v] = F.coalesce(max_count, count_lim[v])
+            days_lim[v] = F.coalesce(max_days, days_lim[v])
+
+    w = Window.partitionBy("station").orderBy("time")
+    first = F.lag(F.lit(1)).over(w).isNull()
+    last = F.lead(F.lit(1)).over(w).isNull()
+    edges = {"__idx": F.row_number().over(w)}
+    for v in vars:
+        edges[f"__start_{v}"] = first | ~F.col(v).eqNullSafe(F.lag(v).over(w))
+        edges[f"__end_{v}"] = last | ~F.col(v).eqNullSafe(F.lead(v).over(w))
+    forward = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    back = (
+        Window.partitionBy("station")
+        .orderBy(F.desc("__idx"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    bounds = {}
+    for v in vars:
+        start, end = F.col(f"__start_{v}"), F.col(f"__end_{v}")
+        bounds[f"__i0_{v}"] = F.max(F.when(start, F.col("__idx"))).over(forward)
+        bounds[f"__t0_{v}"] = F.max(F.when(start, F.col("time"))).over(forward)
+        bounds[f"__i1_{v}"] = F.min(F.when(end, F.col("__idx"))).over(back)
+        bounds[f"__t1_{v}"] = F.min(F.when(end, F.col("time"))).over(back)
+    spans = work.withColumns(edges).withColumns(bounds)
+
+    flags = {}
+    for v in vars:
+        run_len = F.col(f"__i1_{v}") - F.col(f"__i0_{v}") + 1
+        run_days = (
+            F.unix_timestamp(F.col(f"__t1_{v}"))
+            - F.unix_timestamp(F.col(f"__t0_{v}"))
+        ) / F.lit(86400.0)
+        bad = F.col(v).isNotNull() & (
+            (run_len > count_lim[v])
+            | ((run_days > days_lim[v]) & (run_len > 1))
         )
-    )
-    bad = F.col(var).isNotNull() & (
-        (F.col("__run_len") > count_lim)
-        | ((F.col("__run_days") > days_lim) & (F.col("__run_len") > 1))
-    )
-    out = Q.write_flag(spans, var, bad, Q.FLAG_STREAK_CONSECUTIVE)
-    return out.drop(
-        "__run", "__run_len", "__run_days", "__max_count", "__max_days"
+        flags[Q.eraqc(v)] = Q.flag_expr(v, bad, Q.FLAG_STREAK_CONSECUTIVE)
+    return spans.withColumns(flags).drop(
+        "__idx",
+        *[f"__tier_{v}" for v in tiered],
+        *[
+            f"__{p}_{v}"
+            for p in ("start", "end", "i0", "t0", "i1", "t1")
+            for v in vars
+        ],
     )
 
 
@@ -243,31 +289,22 @@ def deaccumulate_precip(df: DataFrame) -> DataFrame:
     """W7/flags 34-35: recover incremental precipitation from an
     accumulated gauge column ``accum_pr`` into ``pr``; the original is
     kept and flagged 35 (qaqc_deaccumulate.py:237-386). Resets
-    (drop < −50) and negative increments clamp to 0."""
+    (drop < −50) and negative increments clamp to 0 (``deaccumulate``)."""
     if "accum_pr" not in df.columns:
         return df
-    w = Window.partitionBy("station").orderBy("time")
-    d = F.col("accum_pr") - F.lag("accum_pr").over(w)
-    incremental = (
-        F.when(d.isNull(), F.lit(None))
-        .when(d < -50.0, F.lit(0.0))
-        .when(d < 0, F.lit(0.0))
-        .otherwise(d)
+    has_accum = F.col("accum_pr").isNotNull()
+    out = deaccumulate(df, "station", "time", "accum_pr", out="__incr")
+    out = out.withColumns(
+        {
+            "pr": F.when(has_accum, F.col("__incr")).otherwise(
+                F.col("pr") if "pr" in df.columns else F.lit(None).cast("double")
+            ),
+            Q.eraqc("accum_pr"): F.when(
+                has_accum, F.lit(float(Q.FLAG_DEACCUM_ORIGINAL))
+            ).otherwise(F.col(Q.eraqc("accum_pr"))),
+        }
     )
-    out = df.withColumn(
-        "pr",
-        F.when(F.col("accum_pr").isNotNull(), incremental).otherwise(
-            F.col("pr") if "pr" in df.columns else F.lit(None).cast("double")
-        ),
-    )
-    out = Q.ensure_flag_columns(out, ["pr"])
-    return out.withColumn(
-        Q.eraqc("accum_pr"),
-        F.when(
-            F.col("accum_pr").isNotNull(),
-            F.lit(float(Q.FLAG_DEACCUM_ORIGINAL)),
-        ).otherwise(F.col(Q.eraqc("accum_pr"))),
-    )
+    return Q.ensure_flag_columns(out, ["pr"]).drop("__incr")
 
 
 def run_qaqc(
@@ -295,23 +332,25 @@ def run_qaqc(
     from ..operators import distribution as D
 
     def cut(d: DataFrame) -> DataFrame:
-        # Lineage truncation between check groups: each check layers
-        # joins/windows on the full prior plan, and Catalyst
-        # analysis/optimization time grows superlinearly with plan
-        # depth (~30 self-referencing stages by the end of the chain).
-        # localCheckpoint materializes the intermediate (the reference
-        # re-reads from disk between stages for the same reason); on a
+        # Lineage truncation: localCheckpoint materializes the
+        # intermediate (the reference re-reads from disk between stages
+        # for the same reason), so the checks after it are analyzed and
+        # planned against a leaf instead of the whole prior plan; on a
         # cluster, swap for reliable checkpoints or a staging table.
+        # Under AQE even the lazy form runs the segment's shuffle
+        # stages here, so a cut costs its own jobs: the chain keeps
+        # only the cuts that measured runs show to pay — after the
+        # logic checks, between the distribution families and at the
+        # end. The streak and spike families share one segment (a cut
+        # between them, and a checkpoint of the resolution table,
+        # made both the no-distribution pipeline pass and the full
+        # battery slower).
         return d.localCheckpoint(eager=False)
 
     out = Q.ensure_flag_columns(df)
     if sentinels:
         out = Q.normalize_sentinels(out, sentinels)
-    gates = Q.station_gates(out)
-    out = Q.apply_station_gates(out, gates)
-    out = Q.sensor_height_check(out)
-    out = Q.elevation_consistency_check(out)
-    out = Q.pressure_units_fix(out)
+    out = Q.station_checks(out)
     out = deaccumulate_precip(out)
     out = Q.world_record_check(out)
     out = Q.supersaturation_check(out)
@@ -337,28 +376,14 @@ def run_qaqc(
         out = D.precip_clim_outlier_check(out, "pr")
         out = cut(out)
         out = D.same_hour_streak_multi(out, streak_vars)
-    # one melted resolution inference for the whole family (resolution
-    # reads raw values only, so hoisting it above the per-var flag
-    # writes changes nothing)
-    res_all = value_resolution_multi(out, streak_vars).localCheckpoint(
-        eager=False
-    )
-    for v in streak_vars:
-        out = consecutive_streak_check(
-            out,
-            v,
-            resolution=res_all.where(F.col("__var") == v).select(
-                "station", "resolution_tier"
-            ),
-        )
-    out = cut(out)
+    out = consecutive_streak_multi(out, streak_vars)
     if with_distribution:
         out = D.whole_day_streak_multi(out, streak_vars)
     out = spike_check_multi(out, spike_vars)
     # Final lineage cut: downstream consumers fan the flagged table
-    # into many plan branches (flag_counts alone explodes one branch
-    # per _eraqc column; hourly_standardize adds another), and without
-    # this cut every branch re-carries — and Catalyst re-analyzes —
-    # the whole spike/streak plan. Measured: chain_qaqc_merge_events
-    # driver-side build time drops ~3x at sf0.01.
+    # into several plan branches (hourly_standardize's grid and
+    # aggregate, the report roll-ups), and without this cut every
+    # branch re-carries — and Catalyst re-analyzes — the whole
+    # spike/streak plan. Measured: chain_qaqc_merge_events driver-side
+    # build time drops ~3x at sf0.01.
     return cut(out)

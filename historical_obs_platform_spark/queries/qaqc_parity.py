@@ -200,7 +200,7 @@ def l8_elevation_consistency(spark, sf_dir):
         .alias("elevation"),
     )
     obs = Q.ensure_flag_columns(obs, ["elevation"])
-    out = Q.elevation_consistency_check(obs)
+    out = Q.station_checks(obs, [Q.elevation_consistency_check])
     return out.select("station", "time", "elevation", "elevation_eraqc")
 
 

@@ -762,7 +762,7 @@ def f_pressure_units_fix(spark, sf_dir):
         .otherwise(F.lit(90000.0) + F.col("value"))
         .alias("ps"),
     )
-    out = Q.pressure_units_fix(obs)
+    out = Q.station_checks(obs, [Q.pressure_units_fix])
     return out.select("station", "time", "ps")
 
 

@@ -381,7 +381,7 @@ def l12_sensor_height(spark, sf_dir):
         .otherwise(F.lit(10.2))
         .alias("anemometer_height_m"),
     )
-    out = Q.sensor_height_check(obs)
+    out = Q.station_checks(obs, [Q.sensor_height_check])
     return out.select(
         "station", "time", "tas", "sfcWind", "tas_eraqc", "sfcWind_eraqc"
     )

@@ -173,8 +173,9 @@ def a32_kruskal_wallis(spark, sf_dir):
             lambda a, b: a + b,
         ).alias("s"),
     )
-    # total rows = sum of per-value counts — no second corpus pass
-    tot = cv.agg(F.sum("cnt").alias("n"))
+    # total rows = sum of per-value counts — no second corpus pass;
+    # an empty corpus sums to NULL where the oracle's count(*) gives 0
+    tot = cv.agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"))
     # decimal cube (not BIGINT): see the oracle's tie CTE comment
     cnt_dec = F.col("cnt").cast("decimal(12,0)")
     tie = cv.agg(

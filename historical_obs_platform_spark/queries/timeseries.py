@@ -120,8 +120,7 @@ def w6_spike_flags(spark, sf_dir):
         joined,
         "user_id",
         "ts",
-        "value",
-        crit=F.lit(1.5) * F.col("iqr"),
+        [("value", F.lit(1.5) * F.col("iqr"), "is_spike")],
         max_len=1,
     )
     return flagged.where(F.col("is_spike")).select("user_id", "ts", "value")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from historical_obs_platform_spark.operators import distribution as D
 from historical_obs_platform_spark.operators import qaqc as Q
 from historical_obs_platform_spark.plans.qaqc_chain import (
+    consecutive_streak_multi,
     run_qaqc,
     spike_check_multi,
 )
@@ -258,6 +259,10 @@ def _repeat_day(st, var):
         st.loc[(st["time"].dt.year == 2019) & (days == k), var] = src
 
 
+def _flat_run(st, var, start=300, n=30):
+    st.loc[start : start + n - 1, var] = 281.5
+
+
 def _two_var_frame():
     s1, s2, s3 = _june("FV_1"), _june("FV_2", amp=2.0), _june("FV_3", amp=2.0)
     s4, s5, s6, s7 = _june("FV_4"), _june("FV_5"), _june("FV_6"), _june("FV_7")
@@ -277,6 +282,8 @@ def _two_var_frame():
     s2.loc[[700, 701], "tdps"] += 30.0
     s7.loc[s7["time"].dt.year < 2019, "tas"] = np.nan
     s5.loc[s5["time"].dt.year < 2019, "tdps"] = np.nan
+    _flat_run(s3, "tas")
+    _flat_run(s6, "tdps", n=50)  # above the 0.1-tier limit of 48
     return pd.concat([s1, s2, s3, s4, s5, s6, s7], ignore_index=True)
 
 
@@ -295,6 +302,7 @@ def two_var_obs(spark):
         D.climatological_outlier_multi,
         D.same_hour_streak_multi,
         D.whole_day_streak_multi,
+        consecutive_streak_multi,
         spike_check_multi,
     ],
     ids=lambda f: f.__name__,

@@ -7,7 +7,7 @@ import pytest
 
 from historical_obs_platform_spark.operators import qaqc as Q
 from historical_obs_platform_spark.plans.qaqc_chain import (
-    consecutive_streak_check,
+    consecutive_streak_multi,
     spike_check_multi,
     value_resolution_multi,
 )
@@ -65,7 +65,7 @@ def test_resolution_aware_streak_thresholds(spark):
     df = Q.ensure_flag_columns(
         spark.createDataFrame(pd.concat([coarse, fine], ignore_index=True))
     )
-    out = consecutive_streak_check(df, "tas").toPandas()
+    out = consecutive_streak_multi(df, ["tas"]).toPandas()
     by_st = out.groupby("station")["tas_eraqc"].apply(
         lambda s: (s == 28).sum()
     )
@@ -74,8 +74,8 @@ def test_resolution_aware_streak_thresholds(spark):
     # a 45-value coarse run exceeds the looser limit too
     coarse2 = _base("COARSE2", round_to=1.0, seed=5)
     coarse2.loc[100:144, "tas"] = 280.0
-    out2 = consecutive_streak_check(
+    out2 = consecutive_streak_multi(
         Q.ensure_flag_columns(spark.createDataFrame(coarse2)),
-        "tas",
+        ["tas"],
     ).toPandas()
     assert (out2["tas_eraqc"] == 28).sum() == 45

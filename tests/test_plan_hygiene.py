@@ -204,3 +204,67 @@ def test_ivfpq_layout_partition_pruning(spark, tmp_path):
     got = sorted(map(tuple, disk.collect()))
     want = sorted(map(tuple, mem.collect()))
     assert got == want and len(got) > 0
+
+
+# ------------------------------------------------------------------
+# QA/QC chain plan shape: a check family reads the rows in a fixed
+# number of passes, whatever the number of variables it covers.
+# ------------------------------------------------------------------
+def _station_frame(spark):
+    import pandas as pd
+
+    from historical_obs_platform_spark.operators import qaqc as Q
+
+    n = 48
+    pdf = pd.DataFrame(
+        {
+            "station": ["A"] * n + ["B"] * n,
+            "time": list(pd.date_range("2020-01-01", periods=n, freq="h")) * 2,
+            "lat": 40.0,
+            "lon": -120.0,
+            "elevation": [10.0] * (2 * n - 1) + [90.0],
+            "thermometer_height_m": 2.0,
+            "anemometer_height_m": 10.0,
+            "tas": [280.0 + i % 5 for i in range(2 * n)],
+            "tdps": [275.0 + i % 3 for i in range(2 * n)],
+            "ps": [900.0 + i % 7 for i in range(2 * n)],
+            "psl": [101000.0 + i % 4 for i in range(2 * n)],
+            "sfcWind": [3.0] * (2 * n),
+        }
+    )
+    return Q.ensure_flag_columns(spark.createDataFrame(pdf))
+
+
+def _count(plan: str, node: str) -> int:
+    import re
+
+    return len(re.findall(rf"\(\d+\) {node}\b", plan))
+
+
+@pytest.mark.parametrize("family", ["spike_check_multi", "consecutive_streak_multi"])
+def test_family_window_count_independent_of_vars(spark, family):
+    from historical_obs_platform_spark.plans import qaqc_chain
+
+    check = getattr(qaqc_chain, family)
+    df = _station_frame(spark)
+    one = _count(_formatted(check(df, ["tas"])), "Window")
+    four = _count(_formatted(check(df, ["tas", "tdps", "ps", "psl"])), "Window")
+    assert one == four > 0
+
+
+def test_station_checks_single_broadcast(spark):
+    from historical_obs_platform_spark.operators import qaqc as Q
+
+    plan = _formatted(Q.station_checks(_station_frame(spark)))
+    # gates, sensor heights, elevation consistency and the pressure
+    # fix all read one broadcast station-statistics table
+    assert _count(plan, "BroadcastExchange") == 1
+
+
+def test_flag_counts_single_scan(spark, tmp_path):
+    from historical_obs_platform_spark.plans.merge import flag_counts
+
+    path = str(tmp_path / "flags")
+    _station_frame(spark).write.parquet(path)
+    plan = _formatted(flag_counts(spark.read.parquet(path)))
+    assert _count(plan, "Scan parquet") == 1

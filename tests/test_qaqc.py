@@ -295,17 +295,30 @@ def test_hourly_standardize(spark):
 def test_flag_counts(spark):
     pdf = pd.DataFrame(
         {
-            "station": ["S1", "S1", "S2"],
-            "time": pd.date_range("2020-01-01", periods=3, freq="h"),
-            "tas": [1.0, 2.0, 3.0],
-            "tas_eraqc": ["11,23", "11", None],
+            "station": ["S1", "S1", "S2", "S2"],
+            "time": pd.date_range("2020-01-01", periods=4, freq="h"),
+            "tas": [1.0, 2.0, 3.0, 4.0],
+            "tas_eraqc": ["11,23", "11", None, ""],
+            "tdps_eraqc": ["", "12", "12,23", "23"],
+            "ps_eraqc": [None, None, None, None],
+            "sfcWind_eraqc": ["8", "", "8,23", None],
         }
     )
     out = flag_counts(spark.createDataFrame(pdf)).toPandas()
     got = {
         (r.station, r.variable, r.flag): r.n for r in out.itertuples()
     }
-    assert got == {("S1", "tas", 11): 2, ("S1", "tas", 23): 1}
+    assert got == {
+        ("S1", "tas", 11): 2,
+        ("S1", "tas", 23): 1,
+        ("S1", "tdps", 12): 1,
+        ("S2", "tdps", 12): 1,
+        ("S2", "tdps", 23): 2,
+        ("S1", "sfcWind", 8): 1,
+        ("S2", "sfcWind", 8): 1,
+        ("S2", "sfcWind", 23): 1,
+    }
+    assert list(out.columns) == ["station", "variable", "flag", "n"]
 
 
 def test_sensor_height_gates(spark):
@@ -330,7 +343,7 @@ def test_sensor_height_gates(spark):
         "station string, tas double, sfcWind double, sfcWind_dir double,"
         " thermometer_height_m double, anemometer_height_m double",
     )
-    out = Q.sensor_height_check(df)
+    out = Q.station_checks(df, [Q.sensor_height_check])
     got = {
         (r.station, r.tas_eraqc, r.sfcWind_eraqc, r.sfcWind_dir_eraqc)
         for r in out.collect()
@@ -346,8 +359,94 @@ def test_sensor_height_gates(spark):
         "tas_eraqc",
         F.when(F.col("station") == "miss_t", 11.0).cast("double"),
     )
-    out2 = Q.sensor_height_check(pre)
+    out2 = Q.station_checks(pre, [Q.sensor_height_check])
     vals = {
         r.tas_eraqc for r in out2.where(F.col("station") == "miss_t").collect()
     }
     assert vals == {11.0}
+
+
+def _station_stats_frame():
+    """One 6-hour station per station-statistics path: gate rejects
+    (no lat/lon; median elevation out of range), two and many
+    elevations, hPa pressure, missing and off-nominal sensor heights."""
+    specs = {
+        # station: (lat, lon, elevations, thermometer_h, anemometer_h, ps)
+        "NOLL": (None, None, [50.0] * 6, 2.0, 10.0, 90000.0),
+        "HIGH": (40.0, -120.0, [7000.0] * 5 + [100.0], 2.0, 10.0, 90000.0),
+        "TWO": (40.0, -120.0, [100.0] * 4 + [200.0] * 2, 2.0, 10.0, 90000.0),
+        "MANY": (
+            40.0, -120.0, [100.0, 104.0, 100.0, 300.0, 102.0, None],
+            2.1, 9.9, 90000.0,
+        ),
+        "HPA": (41.0, -121.0, [20.0] * 6, 2.0, 10.0, 950.0),
+        "NOH": (42.0, -122.0, [30.0] * 6, None, None, 90000.0),
+        "OFF": (43.0, -123.0, [40.0] * 6, 3.0, 12.0, 90000.0),
+    }
+    rows = []
+    for st, (lat, lon, elevs, th, ah, ps) in specs.items():
+        for i, e in enumerate(elevs):
+            rows.append(
+                {
+                    "station": st,
+                    "time": pd.Timestamp("2020-01-01") + pd.Timedelta(hours=i),
+                    "lat": lat,
+                    "lon": lon,
+                    "elevation": e,
+                    # NOH misses its thermometer height on 5 of 6 rows
+                    "thermometer_height_m": 2.0 if st == "NOH" and i == 0 else th,
+                    "anemometer_height_m": ah,
+                    "tas": 280.0 + i,
+                    "sfcWind": 3.0,
+                    "sfcWind_dir": 90.0,
+                    "ps": ps + i,
+                }
+            )
+    return pd.DataFrame(rows)
+
+
+def _hours(station, tas, wind, elev_by_hour, ps0, ps_step=1.0):
+    return [
+        (station, h, tas, wind, wind, elev_by_hour.get(h), ps0 + ps_step * h)
+        for h in range(6)
+    ]
+
+
+# (station, hour, tas, sfcWind, sfcWind_dir and elevation flags, ps)
+EXPECTED_STATION_CHECKS = (
+    _hours("HPA", None, None, {}, 95000.0, 100.0)
+    + _hours("MANY", None, None, {3: 36.0}, 90000.0)
+    + _hours("NOH", 6.0, 8.0, {}, 90000.0)
+    + _hours("OFF", 7.0, 9.0, {}, 90000.0)
+    + _hours("TWO", None, None, {4: 36.0, 5: 36.0}, 90000.0)
+)
+
+
+def test_station_checks_fixed_frame(spark):
+    """Gates, sensor heights, elevation consistency and the pressure
+    fix from one station-statistics join; expected values are the
+    output of the earlier one-aggregate-per-check implementation."""
+    df = Q.ensure_flag_columns(spark.createDataFrame(_station_stats_frame()))
+    assert sorted(map(tuple, Q.station_gates(df).collect())) == [
+        ("HIGH", "elevation_out_of_range"),
+        ("NOLL", "missing_latlon"),
+    ]
+    out = Q.station_checks(df)
+    assert sorted(out.columns) == sorted(df.columns)
+    got = (
+        out.select(
+            "station", "time", "tas_eraqc", "sfcWind_eraqc",
+            "sfcWind_dir_eraqc", "elevation_eraqc", "ps",
+        )
+        .toPandas()
+        .sort_values(["station", "time"])
+    )
+    got = [
+        (r.station, r.time.hour,
+         *[None if pd.isna(x) else x for x in
+           (r.tas_eraqc, r.sfcWind_eraqc, r.sfcWind_dir_eraqc,
+            r.elevation_eraqc)],
+         r.ps)
+        for r in got.itertuples(index=False)
+    ]
+    assert got == EXPECTED_STATION_CHECKS
