@@ -1116,6 +1116,10 @@ def o16_skew_report(spark, sf_dir):
 # d^2 accumulator); the iteration cost is independent of corpus size.
 # --------------------------------------------------------------------
 def _pca_oracle(iters: int = 8) -> str:
+    # Every sweep CTE is MATERIALIZED: DuckDB inlines a plain CTE again
+    # at each reference, and v{k} reads w{k} twice (directly and via
+    # m{k}), so unmaterialized each sweep doubles the plan — 8 sweeps
+    # hold ~2^8 copies of the cmat self-join and exhaust memory.
     head = """
 WITH vq AS (
   SELECT vec_id, pos,
@@ -1124,25 +1128,25 @@ WITH vq AS (
   FROM embeddings,
        unnest(generate_series(1, len(embedding))) AS u(pos)
 ),
-cmat AS (
+cmat AS MATERIALIZED (
   SELECT a.pos AS i, b.pos AS j,
          sum(CAST(a.q AS HUGEINT) * b.q) AS c
   FROM vq a JOIN vq b ON a.vec_id = b.vec_id
   GROUP BY 1, 2
 ),
-v0 AS (
+v0 AS MATERIALIZED (
   SELECT DISTINCT pos, CAST(1000000 AS HUGEINT) AS v FROM vq
 )"""
     steps = []
     for k in range(1, iters + 1):
         steps.append(f"""
-w{k} AS (
+w{k} AS MATERIALIZED (
   SELECT cmat.i AS pos, sum(cmat.c * v.v) AS w
   FROM cmat JOIN v{k - 1} v ON v.pos = cmat.j
   GROUP BY 1
 ),
-m{k} AS (SELECT max(abs(w)) AS m FROM w{k}),
-v{k} AS (
+m{k} AS MATERIALIZED (SELECT max(abs(w)) AS m FROM w{k}),
+v{k} AS MATERIALIZED (
   SELECT pos,
          CASE WHEN w < 0 THEN -((-w * 1000000) // m)
               ELSE (w * 1000000) // m END AS v

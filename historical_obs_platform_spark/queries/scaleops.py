@@ -614,13 +614,19 @@ def _kc_oracle() -> str:
         "len(e.qe)), i -> (e.qe[i] - c.qe[i]) * (e.qe[i] - c.qe[i])),"
         " 'sum')"
     )
+    # Every round CTE is MATERIALIZED: DuckDB inlines a plain CTE again
+    # at each reference, and ch{r} is read by md{r+1} (twice) and by
+    # ch{r+1}, so unmaterialized each round multiplies the plan. q stays
+    # plain: it reads no other CTE, and inlined, the IN filter on the
+    # center side is pushed into its scan (materialized, md{r} becomes
+    # a full n x n cross product).
     parts = [
         f"q AS (SELECT vec_id, {_KC_QE_SQL} AS qe FROM embeddings)",
-        "ch0 AS (SELECT min(vec_id) AS vec_id FROM q)",
+        "ch0 AS MATERIALIZED (SELECT min(vec_id) AS vec_id FROM q)",
     ]
     for r in range(1, _KC_K):
         parts.append(
-            f"""md{r} AS (
+            f"""md{r} AS MATERIALIZED (
   SELECT e.vec_id, min({sq}) AS mind
   FROM q e, q c
   WHERE c.vec_id IN (SELECT vec_id FROM ch{r - 1})
@@ -628,11 +634,11 @@ def _kc_oracle() -> str:
   GROUP BY e.vec_id)"""
         )
         parts.append(
-            f"sel{r} AS (SELECT vec_id, mind FROM md{r} "
+            f"sel{r} AS MATERIALIZED (SELECT vec_id, mind FROM md{r} "
             f"ORDER BY mind DESC, vec_id LIMIT 1)"
         )
         parts.append(
-            f"ch{r} AS (SELECT vec_id FROM ch{r - 1} "
+            f"ch{r} AS MATERIALIZED (SELECT vec_id FROM ch{r - 1} "
             f"UNION ALL SELECT vec_id FROM sel{r})"
         )
     unions = [
