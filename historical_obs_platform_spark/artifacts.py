@@ -1,68 +1,87 @@
-"""Session-shared artifact bookkeeping.
+"""Session-shared artifacts: the one memo behind every reused build.
 
-Several query families memoize deterministic index artifacts per
-(session, data dir) — the near-dup LSH index, PQ codebooks/codes,
+Several query families reuse deterministic index artifacts across the
+queries of one session — the near-dup LSH index, PQ codebooks/codes,
 graph edge tables, streaming static indexes, IVF centroid fits, the
-table handles — each behind a lazily materialized ``localCheckpoint``.
-The blocks spill MEMORY_AND_DISK, but they live for the whole
-application with no eviction, so executor storage grows monotonically
-with the number of (sf_dir, artifact) combinations a session touches
-(r8 ADVICE item 4).
+shared QA/QC chain output, the table handles. One rule covers all of
+them: an artifact is a deterministic, observation-free intermediate
+of the current parquet inputs (never a query result), so reusing it
+cannot change an answer. Its builder is decorated with ``@shared``,
+which keeps one entry per (builder qualified name, Spark
+applicationId, remaining arguments bound with their defaults
+applied). applicationId is stable for a context's lifetime and never
+reused by a successor in-process (``id()`` of the py4j wrapper can
+be), so a new session never sees a stale entry. Each builder decides
+for itself whether its result is collected rows, a lazily
+``localCheckpoint``-ed frame or a tuple of them.
 
-``unshare_all()`` is the eviction hook: it clears every memo dict and
-drops the Python references, after which Spark's ContextCleaner
+The entries live for the whole application with no eviction: the
+checkpoint blocks spill MEMORY_AND_DISK, so executor storage grows
+with the number of (data dir, artifact) combinations a session
+touches. ``unshare_all()`` is the eviction hook: it empties the store
+and drops the Python references, after which Spark's ContextCleaner
 reclaims the checkpoint/broadcast blocks on the next periodic GC
 (``spark.cleaner.periodicGC.interval`` is pinned to 45 s in
 session.get_spark). Call it between corpora in a long-lived session,
-or before benchmarking cold-path behavior. The next consumer of any
-artifact simply rebuilds it — correctness is unaffected because every
-memo holds a deterministic intermediate of the current parquet
-inputs, never query results.
+or before benchmarking cold-path behavior; the next consumer of any
+artifact simply rebuilds it.
 """
 
 from __future__ import annotations
 
+import functools
 import gc
+import inspect
+from typing import Any, Callable
+
+_STORE: dict[tuple, tuple] = {}
+
+
+def shared(build: Callable | None = None, /, **key_of: Callable[[Any], Any]):
+    """Memoize the artifact builder ``build(spark, ...)`` in the store.
+
+    Positional, keyword and default spellings of the same arguments
+    share one entry. ``key_of`` maps a parameter whose value cannot
+    serve as a key (an operating-point dict, a collected codebook) to
+    the function giving its key part; the entry also holds that
+    argument's value, so a key part taken from ``id()`` cannot be
+    reused while the entry lives. Use as ``@shared`` or
+    ``@shared(point=_sfx)``.
+    """
+    if build is None:
+        return functools.partial(shared, **key_of)
+    sig = inspect.signature(build)
+    name = f"{build.__module__}.{build.__qualname__}"
+
+    @functools.wraps(build)
+    def memo(spark, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        params = list(bound.arguments.items())[1:]
+        key = (
+            name,
+            spark.sparkContext.applicationId,
+            *(key_of[p](v) if p in key_of else v for p, v in params),
+        )
+        entry = _STORE.get(key)
+        if entry is None:
+            pinned = tuple(v for p, v in params if p in key_of)
+            entry = _STORE[key] = (build(*bound.args, **bound.kwargs), pinned)
+        return entry[0]
+
+    return memo
 
 
 def _memo_dicts() -> list[dict]:
-    """Every module-level shared-artifact memo (lazy imports — query
-    modules pull in the full operator surface)."""
-    from . import tables
-    from .queries import (
-        chain_demo,
-        curation3,
-        graph,
-        graph2,
-        streaming_demo,
-        textops,
-    )
-
-    return [
-        tables._DF_MEMO,
-        textops._LSH_SHARED,
-        textops._DUP_COMP_SHARED,
-        textops._SIMHASH_SHARED,
-        textops._IVF_CENT_SHARED,
-        chain_demo._CHAIN_SHARED,
-        chain_demo._LOGIC_SHARED,
-        graph._GRAPH_SHARED,
-        graph2._TRADE_SHARED,
-        curation3._PQ_SHARED,
-        curation3._IVFPQ_SHARED,
-        streaming_demo._NEARDUP_STATIC,
-        streaming_demo._SEMDEDUP_STATIC,
-    ]
+    return [_STORE]
 
 
 def unshare_all() -> int:
-    """Drop every session-shared artifact memo; returns the number of
+    """Drop every session-shared artifact; returns the number of
     entries released. Safe to call at any point — consumers rebuild
     lazily on next use."""
-    n = 0
-    for d in _memo_dicts():
-        n += len(d)
-        d.clear()
+    n = len(_STORE)
+    _STORE.clear()
     # Without live references the checkpoint RDDs become collectable;
     # a driver-side gc.collect() lets the ContextCleaner queue them
     # now instead of whenever CPython gets around to it.

@@ -251,9 +251,12 @@ def supersaturation_check(df: DataFrame) -> DataFrame:
 
 
 # ----------------------------------------------------------- L2 wet bulb
-def wetbulb_streak_check(
-    df: DataFrame, min_span_hours: int = 24
-) -> DataFrame:
+# A zero dewpoint depression held this long is an instrument failure
+# (qaqc_logic_checks.py:80-151).
+WETBULB_MIN_SPAN_HOURS = 24
+
+
+def wetbulb_streak_check(df: DataFrame) -> DataFrame:
     """Flag 13 on tdps across any window where the dewpoint depression
     (tas − tdps) is exactly 0 continuously for ≥ 24 h — instrument
     failure (qaqc_logic_checks.py:80-151). O(n) sessionization replaces
@@ -269,7 +272,7 @@ def wetbulb_streak_check(
             "station",
             "time",
             predicate=pred,
-            min_span_seconds=min_span_hours * 3600,
+            min_span_seconds=WETBULB_MIN_SPAN_HOURS * 3600,
             flag_col="__wb_flag",
             flag_value=FLAG_WETBULB_STREAK,
         )
@@ -440,7 +443,8 @@ def station_statistics(df: DataFrame) -> DataFrame:
     )
 
 
-def _reject_reason(elev_range: tuple[float, float]) -> Column:
+def _reject_reason() -> Column:
+    lo, hi = STATION_ELEV_RANGE
     med = F.col("__elev_med")
     return (
         F.when(F.col("__n_any") == 0, "no_data_vars")
@@ -449,8 +453,7 @@ def _reject_reason(elev_range: tuple[float, float]) -> Column:
             "missing_latlon",
         )
         .when(
-            med.isNotNull()
-            & ((med < elev_range[0]) | (med > elev_range[1])),
+            med.isNotNull() & ((med < lo) | (med > hi)),
             "elevation_out_of_range",
         )
     )
@@ -460,9 +463,7 @@ def _reject_reason(elev_range: tuple[float, float]) -> Column:
 STATION_ELEV_RANGE = (-95.0, 6210.0)
 
 
-def station_gates(
-    df: DataFrame, elev_range: tuple[float, float] = STATION_ELEV_RANGE
-) -> DataFrame:
+def station_gates(df: DataFrame) -> DataFrame:
     """Whole-station eligibility gates (qaqc_wholestation.py:56-110,
     199-228, 537-574): a station is rejected when it has no data
     variables, all-null lat/lon, or median elevation outside
@@ -471,7 +472,7 @@ def station_gates(
     ``station_checks``."""
     return (
         station_statistics(df)
-        .select("station", _reject_reason(elev_range).alias("reject_reason"))
+        .select("station", _reject_reason().alias("reject_reason"))
         .where(F.col("reject_reason").isNotNull())
     )
 
@@ -485,7 +486,7 @@ def drop_rejected_stations(df: DataFrame) -> DataFrame:
     that ``station_checks`` joins in, so call it as
     ``station_checks(df, [drop_rejected_stations])``; on a bare frame
     those columns do not resolve."""
-    return df.where(_reject_reason(STATION_ELEV_RANGE).isNull())
+    return df.where(_reject_reason().isNull())
 
 
 # ------------------------------------------------- sensor-height gates

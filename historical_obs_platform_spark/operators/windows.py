@@ -225,18 +225,23 @@ def detect_spikes_multi(
     )
 
 
+# A drop below this is a gauge counter reset (qaqc_deaccumulate.py:
+# 167-234).
+DEACCUM_RESET_DROP = -50.0
+
+
 def deaccumulate(
     df: DataFrame,
     key,
     time_col: str,
     col: str,
-    reset_drop: float = -50.0,
     out: str = "deaccumulated",
 ) -> DataFrame:
     """W7: recover incremental values from an accumulated gauge.
 
-    incremental = diff; counter resets (drop below ``reset_drop``)
-    and negative increments clamp to 0 (qaqc_deaccumulate.py:167-234).
+    incremental = diff; counter resets (drop below
+    ``DEACCUM_RESET_DROP``) and negative increments clamp to 0
+    (qaqc_deaccumulate.py:167-234).
     The first row of each key yields null (no prior reading).
     """
     w = ordered_window(key, time_col)
@@ -244,7 +249,7 @@ def deaccumulate(
     return df.withColumn(
         out,
         F.when(d.isNull(), F.lit(None))
-        .when(d < F.lit(reset_drop), F.lit(0.0))
+        .when(d < F.lit(DEACCUM_RESET_DROP), F.lit(0.0))
         .when(d < 0, F.lit(0.0))
         .otherwise(d),
     )

@@ -55,19 +55,17 @@ def station_list(obs: DataFrame) -> DataFrame:
     )
 
 
-def write_stage(
-    df: DataFrame, path: str, partition_col: str = "network"
-) -> None:
+def write_stage(df: DataFrame, path: str) -> None:
     """S8: stage sink — parquet partitioned by network, rows sorted by
     (station, time) within files (the analog of the reference's one
     zarr per station with a single time chunk,
     MERGE_pipeline.py:380-410): partition pruning on network, row-group
     locality on station/time."""
     (
-        df.repartition(partition_col)
+        df.repartition("network")
         .sortWithinPartitions("station", "time")
         .write.mode("overwrite")
-        .partitionBy(partition_col)
+        .partitionBy("network")
         .parquet(path)
     )
 
@@ -84,7 +82,6 @@ def write_bucketed_stage(
     table_name: str,
     path: str | None = None,
     n_buckets: int = 64,
-    sort_col: str = "time",
 ) -> None:
     """Bucketed stage table (the 100 TB layout): every station's rows
     land in one bucket file, sorted by time — station-keyed groupBy /
@@ -96,7 +93,7 @@ def write_bucketed_stage(
     w = (
         df.write.mode("overwrite")
         .bucketBy(n_buckets, "station")
-        .sortBy("station", sort_col)
+        .sortBy("station", "time")
         .format("parquet")
     )
     if path is not None:

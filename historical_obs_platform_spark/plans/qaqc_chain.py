@@ -56,6 +56,20 @@ for _alias, _src in (
 ):
     STRAIGHT_REPEAT_THRESHOLDS[_alias] = STRAIGHT_REPEAT_THRESHOLDS[_src]
 
+# Straight-repeat limits for stations with no inferred resolution and
+# variables the table above does not list (qaqc_unusual_streaks.py:
+# 573-694): a run of more than 20 values or spanning more than 2 days.
+STREAK_MIN_COUNT = 20
+STREAK_MIN_SPAN_DAYS = 2.0
+
+# Unusual-jump criterion (qaqc_unusual_large_jumps.py:219-299): crit =
+# 6 × IQR of first differences per (station, calendar month), months
+# with more than 50 differences only; confirmation neighbours at most
+# 12 h apart.
+SPIKE_IQR_FACTOR = 6.0
+SPIKE_MIN_POINTS = 50
+SPIKE_MAX_GAP_HOURS = 12
+
 
 def value_resolution_multi(df: DataFrame, vars) -> DataFrame:
     """A12: per-station reported value resolution — the mode of the
@@ -108,17 +122,12 @@ def value_resolution_multi(df: DataFrame, vars) -> DataFrame:
     )
 
 
-def spike_check_multi(
-    df: DataFrame,
-    vars,
-    factor: float = 6.0,
-    min_points: int = 50,
-    max_gap_hours: int = 12,
-) -> DataFrame:
-    """Flag 23: unusual jumps. crit = factor × IQR of first differences
-    per (station, calendar month), months with > min_points only
-    (qaqc_unusual_large_jumps.py:219-299; 1-to-3-point confirmation:
-    big jump in, big opposite jump out, neighbor gaps ≤ 12 h).
+def spike_check_multi(df: DataFrame, vars) -> DataFrame:
+    """Flag 23: unusual jumps. crit = SPIKE_IQR_FACTOR × IQR of first
+    differences per (station, calendar month), months with more than
+    SPIKE_MIN_POINTS only (qaqc_unusual_large_jumps.py:219-299;
+    1-to-3-point confirmation: big jump in, big opposite jump out,
+    neighbor gaps ≤ SPIKE_MAX_GAP_HOURS).
 
     ONE window select computes every variable's first difference,
     ONE (station, month) aggregation every variable's diff-IQR
@@ -154,10 +163,10 @@ def spike_check_multi(
             "__month",
             *[
                 F.when(
-                    F.col(f"__n_{v}") > min_points,
-                    F.ceil(F.lit(factor) * F.col(f"__iqr_{v}")).cast(
-                        "double"
-                    ),
+                    F.col(f"__n_{v}") > SPIKE_MIN_POINTS,
+                    F.ceil(
+                        F.lit(SPIKE_IQR_FACTOR) * F.col(f"__iqr_{v}")
+                    ).cast("double"),
                 ).alias(f"__crit_{v}")
                 for v in vars
             ],
@@ -168,7 +177,7 @@ def spike_check_multi(
         "station",
         "time",
         [(v, F.col(f"__crit_{v}"), f"__spike_{v}") for v in vars],
-        max_gap_seconds=max_gap_hours * 3600,
+        max_gap_seconds=SPIKE_MAX_GAP_HOURS * 3600,
         max_len=3,
     )
     out = out.withColumns(
@@ -187,21 +196,16 @@ def spike_check_multi(
     )
 
 
-def consecutive_streak_multi(
-    df: DataFrame,
-    vars,
-    min_count: int = 20,
-    min_span_days: float | None = 2.0,
-) -> DataFrame:
+def consecutive_streak_multi(df: DataFrame, vars) -> DataFrame:
     """Flag 28: straight repeated-value streaks — runs of consecutive
     identical non-null values longer than the count threshold OR
     spanning more than the day threshold
     (qaqc_unusual_streaks.py:573-694).
 
     The per-variable table keyed by the station's inferred value
-    resolution picks the thresholds (:44-122); ``min_count`` and
-    ``min_span_days`` apply to stations with no inferred resolution
-    and to variables the table does not list.
+    resolution picks the thresholds (:44-122); ``STREAK_MIN_COUNT`` and
+    ``STREAK_MIN_SPAN_DAYS`` apply to stations with no inferred
+    resolution and to variables the table does not list.
 
     Every variable shares the passes: one broadcast join of the
     resolution tiers pivoted to (station, __tier_<var>…); one ordered
@@ -216,9 +220,8 @@ def consecutive_streak_multi(
     vars = [v for v in vars if v in df.columns]
     if not vars:
         return df
-    default_days = min_span_days if min_span_days is not None else 1e9
-    count_lim = {v: F.lit(min_count) for v in vars}
-    days_lim = {v: F.lit(default_days) for v in vars}
+    count_lim = {v: F.lit(STREAK_MIN_COUNT) for v in vars}
+    days_lim = {v: F.lit(STREAK_MIN_SPAN_DAYS) for v in vars}
     work = df
     tiered = [v for v in vars if v in STRAIGHT_REPEAT_THRESHOLDS]
     if tiered:
@@ -241,9 +244,11 @@ def consecutive_streak_multi(
             days_lim[v] = F.coalesce(max_days, days_lim[v])
 
     w = Window.partitionBy("station").orderBy("time")
-    first = F.lag(F.lit(1)).over(w).isNull()
-    last = F.lead(F.lit(1)).over(w).isNull()
-    edges = {"__idx": F.row_number().over(w)}
+    # Catalyst does not share a window function between the
+    # expressions that use it, so the first/last-row tests are
+    # columns, computed once for every variable
+    first, last = F.col("__idx") == 1, F.col("__last")
+    edges = {}
     for v in vars:
         edges[f"__start_{v}"] = first | ~F.col(v).eqNullSafe(F.lag(v).over(w))
         edges[f"__end_{v}"] = last | ~F.col(v).eqNullSafe(F.lead(v).over(w))
@@ -260,7 +265,16 @@ def consecutive_streak_multi(
         bounds[f"__t0_{v}"] = F.max(F.when(start, F.col("time"))).over(forward)
         bounds[f"__i1_{v}"] = F.min(F.when(end, F.col("__idx"))).over(back)
         bounds[f"__t1_{v}"] = F.min(F.when(end, F.col("time"))).over(back)
-    spans = work.withColumns(edges).withColumns(bounds)
+    spans = (
+        work.withColumns(
+            {
+                "__idx": F.row_number().over(w),
+                "__last": F.lead(F.lit(1)).over(w).isNull(),
+            }
+        )
+        .withColumns(edges)
+        .withColumns(bounds)
+    )
 
     flags = {}
     for v in vars:
@@ -276,6 +290,7 @@ def consecutive_streak_multi(
         flags[Q.eraqc(v)] = Q.flag_expr(v, bad, Q.FLAG_STREAK_CONSECUTIVE)
     return spans.withColumns(flags).drop(
         "__idx",
+        "__last",
         *[f"__tier_{v}" for v in tiered],
         *[
             f"__{p}_{v}"

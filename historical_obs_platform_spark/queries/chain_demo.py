@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..artifacts import shared
 from ..plans.merge import flag_counts, hourly_standardize
 from ..plans.qaqc_chain import run_qaqc
 from ..registry import query
@@ -184,40 +185,33 @@ FROM gh LEFT JOIN nf ON gh.station = nf.station
 
 
 # Flagged-chain output shared between chain_qaqc_merge_events and the
-# flag-rates report (both consume the identical run_qaqc result; the
-# driver sweeps every query in one session, so memoize one
-# lazily-localCheckpointed handle per (session, sf_dir) — same
-# pattern and rationale as textops._lsh_shared).
-_CHAIN_SHARED: dict[tuple, object] = {}
-
-
+# flag-rates report (both consume the identical run_qaqc result, and
+# a registry sweep runs every query in one session).
+@shared
 def _chain_flagged(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CHAIN_SHARED:
-        ev = table(spark, sf_dir, "events")
-        obs = ev.select(
-            F.col("user_id").cast("string").alias("station"),
-            F.col("ts").alias("time"),
-            F.lit(40.0).alias("lat"),
-            F.lit(-120.0).alias("lon"),
-            F.lit(100.0).alias("elevation"),
-            (F.lit(200.0) + F.col("value") / 2).alias("tas"),
-            (F.lit(195.0) + F.col("value") / 2).alias("tdps"),
-            F.pmod(F.col("value"), F.lit(30.0)).alias("pr"),
-            (F.floor(F.col("value")) % 25).cast("double").alias("sfcWind"),
-            (F.floor(F.col("value") * 7) % 361).cast("double").alias(
-                "sfcWind_dir"
-            ),
-        )
-        # 30-day records: distribution tests are gated off by design
-        # (record-length bypass would yellow-flag everything anyway)
-        _CHAIN_SHARED[key] = run_qaqc(
-            obs,
-            with_distribution=False,
-            spike_vars=("tas",),
-            streak_vars=("tas",),
-        )
-    return _CHAIN_SHARED[key]
+    ev = table(spark, sf_dir, "events")
+    obs = ev.select(
+        F.col("user_id").cast("string").alias("station"),
+        F.col("ts").alias("time"),
+        F.lit(40.0).alias("lat"),
+        F.lit(-120.0).alias("lon"),
+        F.lit(100.0).alias("elevation"),
+        (F.lit(200.0) + F.col("value") / 2).alias("tas"),
+        (F.lit(195.0) + F.col("value") / 2).alias("tdps"),
+        F.pmod(F.col("value"), F.lit(30.0)).alias("pr"),
+        (F.floor(F.col("value")) % 25).cast("double").alias("sfcWind"),
+        (F.floor(F.col("value") * 7) % 361).cast("double").alias(
+            "sfcWind_dir"
+        ),
+    )
+    # 30-day records: distribution tests are gated off by design
+    # (record-length bypass would yellow-flag everything anyway)
+    return run_qaqc(
+        obs,
+        with_distribution=False,
+        spike_vars=("tas",),
+        streak_vars=("tas",),
+    )
 
 
 @query("chain_qaqc_merge_events", CHAIN_QAQC_ORACLE)
@@ -482,18 +476,10 @@ FROM grid g LEFT JOIN hourly h
 
 
 # Hourly chain output shared between chain_logic_hourly and the
-# hourly flag-rates report (same memoization rationale as
-# _chain_flagged above).
-_LOGIC_SHARED: dict[tuple, object] = {}
-
-
+# hourly flag-rates report.
+@shared
 def _logic_hourly(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LOGIC_SHARED:
-        _LOGIC_SHARED[key] = _build_logic_hourly(
-            spark, sf_dir
-        ).localCheckpoint(eager=False)
-    return _LOGIC_SHARED[key]
+    return _build_logic_hourly(spark, sf_dir).localCheckpoint(eager=False)
 
 
 @query("chain_logic_hourly", CHAIN_LOGIC_ORACLE)

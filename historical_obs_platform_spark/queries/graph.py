@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..artifacts import shared
 from ..registry import query
 from .common import table
 
@@ -26,61 +27,46 @@ _SCALE = 1_000_000_000  # ranks in parts-per-billion
 _ITERS = 3
 
 
-# Session-scoped memo of the graph-family base builds (the textops
-# `_lsh_shared` discipline, round-1 VERDICT #4): the full-bipartite
-# pair table and its derived edge lists are rebuilt identically by
-# every graph query (lineitem ⋈ orders + distinct, ~1 s each at
-# sf0.1), so the first consumer materializes one lazily-
-# localCheckpointed handle and the family reuses it. Deterministic
-# build → the memo is observation-free; the 100 TB analog is staging
-# the edge table once per corpus version.
-_GRAPH_SHARED: dict = {}
-
-
+# Session-shared graph-family base builds (round-1 VERDICT #4): the
+# full-bipartite pair table and its derived edge lists are rebuilt
+# identically by every graph query (lineitem ⋈ orders + distinct,
+# ~1 s each at sf0.1), so the first consumer materializes one lazily-
+# localCheckpointed handle and the family reuses it; the 100 TB
+# analog is staging the edge table once per corpus version.
+@shared
 def _bi_pairs(spark, sf_dir):
     """Distinct raw (c, s) customer–supplier trade pairs of the FULL
     graph, checkpointed once per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "bi_pairs")
-    if key not in _GRAPH_SHARED:
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey"
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    od = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    return (
+        li.join(od, li.l_orderkey == od.o_orderkey)
+        .select(
+            F.col("o_custkey").alias("c"),
+            F.col("l_suppkey").alias("s"),
         )
-        od = table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        _GRAPH_SHARED[key] = (
-            li.join(od, li.l_orderkey == od.o_orderkey)
-            .select(
-                F.col("o_custkey").alias("c"),
-                F.col("l_suppkey").alias("s"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-    return _GRAPH_SHARED[key]
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
 
 
+@shared
 def _edges(spark, sf_dir):
     """Distinct customer↔supplier trade edges, both directions, with
     namespaced node ids (customers even: 2k, suppliers odd: 2k+1) so
     the two key spaces can't collide. Checkpointed + memoized (multi-
     round consumers reference it many times)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "full_edges")
-    if key not in _GRAPH_SHARED:
-        pairs = _bi_pairs(spark, sf_dir).select(
-            (F.col("c") * 2).alias("cust_node"),
-            (F.col("s") * 2 + 1).alias("supp_node"),
-        )
-        fwd = pairs.select(
-            F.col("cust_node").alias("src"), F.col("supp_node").alias("dst")
-        )
-        rev = pairs.select(
-            F.col("supp_node").alias("src"), F.col("cust_node").alias("dst")
-        )
-        _GRAPH_SHARED[key] = fwd.unionByName(rev).localCheckpoint(
-            eager=False
-        )
-    return _GRAPH_SHARED[key]
+    pairs = _bi_pairs(spark, sf_dir).select(
+        (F.col("c") * 2).alias("cust_node"),
+        (F.col("s") * 2 + 1).alias("supp_node"),
+    )
+    fwd = pairs.select(
+        F.col("cust_node").alias("src"), F.col("supp_node").alias("dst")
+    )
+    rev = pairs.select(
+        F.col("supp_node").alias("src"), F.col("cust_node").alias("dst")
+    )
+    return fwd.unionByName(rev).localCheckpoint(eager=False)
 
 
 PAGERANK_ORACLE = f"""
@@ -208,6 +194,7 @@ def g_pagerank_fixed(spark, sf_dir):
     )
 
 
+@shared
 def _urgent_copurchase(spark, sf_dir):
     """Shared graph definition for the census/traversal queries: the
     (order, part) item table of URGENT orders and the distinct
@@ -217,53 +204,46 @@ def _urgent_copurchase(spark, sf_dir):
     handles are checkpointed + memoized per (session, sf_dir): five
     queries (triangle, k-hop, SSSP, local clustering, harmonic) build
     this identical subgraph."""
-    key = (spark.sparkContext.applicationId, sf_dir, "urgent")
-    if key not in _GRAPH_SHARED:
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    od = (
+        table(spark, sf_dir, "orders")
+        .where(F.col("o_orderpriority") == "1-URGENT")
+        .select("o_orderkey")
+    )
+    items = (
+        li.join(od, li.l_orderkey == od.o_orderkey)
+        .select(
+            F.col("l_orderkey").alias("ok"),
+            F.col("l_partkey").alias("pk"),
         )
-        od = (
-            table(spark, sf_dir, "orders")
-            .where(F.col("o_orderpriority") == "1-URGENT")
-            .select("o_orderkey")
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    a, b = items.alias("a"), items.alias("b")
+    edges = (
+        a.join(
+            b,
+            on=[
+                F.col("a.ok") == F.col("b.ok"),
+                F.col("a.pk") < F.col("b.pk"),
+            ],
         )
-        items = (
-            li.join(od, li.l_orderkey == od.o_orderkey)
-            .select(
-                F.col("l_orderkey").alias("ok"),
-                F.col("l_partkey").alias("pk"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        a, b = items.alias("a"), items.alias("b")
-        edges = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.ok") == F.col("b.ok"),
-                    F.col("a.pk") < F.col("b.pk"),
-                ],
-            )
-            .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        _GRAPH_SHARED[key] = (items, edges)
-    return _GRAPH_SHARED[key]
+        .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    return items, edges
 
 
+@shared
 def _urgent_sym(spark, sf_dir):
     """Symmetric (both-direction) edge list over `_urgent_copurchase`,
     checkpointed + memoized — the traversal queries (k-hop, SSSP,
     harmonic) all expand along this one table."""
-    key = (spark.sparkContext.applicationId, sf_dir, "urgent_sym")
-    if key not in _GRAPH_SHARED:
-        _items, e0 = _urgent_copurchase(spark, sf_dir)
-        _GRAPH_SHARED[key] = e0.unionByName(
-            e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).localCheckpoint(eager=False)
-    return _GRAPH_SHARED[key]
+    _items, e0 = _urgent_copurchase(spark, sf_dir)
+    return e0.unionByName(
+        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint(eager=False)
 
 
 # --------------------------------------------------------------------

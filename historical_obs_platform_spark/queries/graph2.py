@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..artifacts import shared
 from ..registry import query
 from .common import table
 
@@ -71,69 +72,55 @@ pairs AS (
 )"""
 
 
-# Session-scoped memo of the sparsified-graph builds (the graph.py
-# `_GRAPH_SHARED` / textops `_lsh_shared` discipline): six queries
-# across graph2/graph3 rebuild the identical lineitem ⋈ orders +
-# distinct pair table per invocation; the first consumer materializes
-# one lazily-localCheckpointed handle per (session, sf_dir) and the
-# family reuses it. Deterministic build → observation-free memo.
-_TRADE_SHARED: dict = {}
-
-
+# Session-shared sparsified-graph builds: six queries across
+# graph2/graph3 rebuild the identical lineitem ⋈ orders + distinct
+# pair table per invocation; the first consumer materializes one
+# lazily-localCheckpointed handle per (session, sf_dir) and the
+# family reuses it.
+@shared
 def _trade_pairs(spark, sf_dir, namespaced: bool = True):
     """Distinct pairs of the sparsified trade graph — namespaced
     (cust_node, supp_node) or raw bipartite (c, s) keys —
     localCheckpoint'ed + memoized so multi-reference consumers (and
     repeat queries) don't re-execute the lineitem⋈orders build."""
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "pairs", namespaced,
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_quantity"
     )
-    if key not in _TRADE_SHARED:
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey", "l_quantity"
-        )
-        od = table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        joined = li.where(F.col("l_quantity") >= _MIN_QTY).join(
-            od, li.l_orderkey == od.o_orderkey
-        )
-        if namespaced:
-            cols = [
-                (F.col("o_custkey") * 2).alias("cust_node"),
-                (F.col("l_suppkey") * 2 + 1).alias("supp_node"),
-            ]
-        else:
-            cols = [
-                F.col("o_custkey").alias("c"),
-                F.col("l_suppkey").alias("s"),
-            ]
-        _TRADE_SHARED[key] = (
-            joined.select(*cols).distinct().localCheckpoint(eager=False)
-        )
-    return _TRADE_SHARED[key]
+    od = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    joined = li.where(F.col("l_quantity") >= _MIN_QTY).join(
+        od, li.l_orderkey == od.o_orderkey
+    )
+    if namespaced:
+        cols = [
+            (F.col("o_custkey") * 2).alias("cust_node"),
+            (F.col("l_suppkey") * 2 + 1).alias("supp_node"),
+        ]
+    else:
+        cols = [
+            F.col("o_custkey").alias("c"),
+            F.col("l_suppkey").alias("s"),
+        ]
+    return joined.select(*cols).distinct().localCheckpoint(eager=False)
 
 
+@shared
 def _trade_edges(spark, sf_dir):
     """Symmetric directed edge list over `_trade_pairs` (both
     directions), localCheckpoint'ed + memoized for loop consumers."""
-    key = (spark.sparkContext.applicationId, sf_dir, "edges")
-    if key not in _TRADE_SHARED:
-        pairs = _trade_pairs(spark, sf_dir)
-        _TRADE_SHARED[key] = (
-            pairs.select(
-                F.col("cust_node").alias("src"),
-                F.col("supp_node").alias("dst"),
-            )
-            .unionByName(
-                pairs.select(
-                    F.col("supp_node").alias("src"),
-                    F.col("cust_node").alias("dst"),
-                )
-            )
-            .localCheckpoint(eager=False)
+    pairs = _trade_pairs(spark, sf_dir)
+    return (
+        pairs.select(
+            F.col("cust_node").alias("src"),
+            F.col("supp_node").alias("dst"),
         )
-    return _TRADE_SHARED[key]
+        .unionByName(
+            pairs.select(
+                F.col("supp_node").alias("src"),
+                F.col("cust_node").alias("dst"),
+            )
+        )
+        .localCheckpoint(eager=False)
+    )
 
 
 # ------------------------------------------------------------------ #

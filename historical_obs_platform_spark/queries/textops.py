@@ -14,6 +14,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from ..artifacts import shared
 from ..functions import textfns as TX
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
@@ -246,23 +247,11 @@ def _near_corpus_spark(spark, sf_dir):
 # blocks, the rest of the family reuses them (localCheckpoint blocks
 # live in the block manager, not the SQL cache, so a
 # catalog.clearCache() between queries doesn't throw them away).
-# Correctness is unaffected — the blocks hold exactly the operator
-# output. At 100 TB the equivalent is materializing the shingle /
-# candidate tables to a staging location once per corpus version
+# At 100 TB the equivalent is materializing the shingle / candidate
+# tables to a staging location once per corpus version
 # (localCheckpoint is executor-local; see dedup.connected_components
 # for the reliable-checkpoint variant).
-#
-# Storage note (r8 ADVICE): these handles live for the application
-# with no eviction, so storage grows with the number of (sf_dir,
-# artifact) combinations touched — several are corpus-sized (the
-# 3-table bucket index, cell-assigned corpus, decimated shingles).
-# Blocks spill MEMORY_AND_DISK, so growth degrades to disk rather
-# than OOM; long-lived sessions that switch corpora should call
-# ``historical_obs_platform_spark.artifacts.unshare_all()`` between
-# corpora to release every memo (consumers rebuild lazily).
-_LSH_SHARED: dict[tuple, tuple] = {}
-
-
+@shared
 def _lsh_shared_full(spark, sf_dir):
     """(shingles, sigs, buckets, cand) — every level of the shared
     near-dup index, each localCheckpointed.
@@ -278,26 +267,20 @@ def _lsh_shared_full(spark, sf_dir):
     narrow — the production analog is that a stored LSH index keeps
     its signature and bucket tables, not just its candidate pairs.
     """
-    # applicationId is stable for a context's lifetime and never
-    # reused by a successor in-process (id() of the py4j wrapper can
-    # be — CPython reuses addresses after GC)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LSH_SHARED:
-        corpus = _near_corpus_spark(spark, sf_dir)
-        shingles = DD.word_shingles(
-            corpus, "doc_id", "text", n=2
-        ).localCheckpoint(eager=False)
-        sigs = DD.minhash_signatures(
-            shingles, "doc_id", n_hashes=LSH_N_HASHES
-        ).localCheckpoint(eager=False)
-        buckets = DD.lsh_buckets(
-            sigs, "doc_id", n_hashes=LSH_N_HASHES, bands=LSH_BANDS
-        ).localCheckpoint(eager=False)
-        cand = DD.lsh_candidate_pairs(
-            buckets, "doc_id"
-        ).localCheckpoint(eager=False)
-        _LSH_SHARED[key] = (shingles, sigs, buckets, cand)
-    return _LSH_SHARED[key]
+    corpus = _near_corpus_spark(spark, sf_dir)
+    shingles = DD.word_shingles(
+        corpus, "doc_id", "text", n=2
+    ).localCheckpoint(eager=False)
+    sigs = DD.minhash_signatures(
+        shingles, "doc_id", n_hashes=LSH_N_HASHES
+    ).localCheckpoint(eager=False)
+    buckets = DD.lsh_buckets(
+        sigs, "doc_id", n_hashes=LSH_N_HASHES, bands=LSH_BANDS
+    ).localCheckpoint(eager=False)
+    cand = DD.lsh_candidate_pairs(
+        buckets, "doc_id"
+    ).localCheckpoint(eager=False)
+    return shingles, sigs, buckets, cand
 
 
 def _lsh_shared(spark, sf_dir):
@@ -305,6 +288,7 @@ def _lsh_shared(spark, sf_dir):
     return shingles, cand
 
 
+@shared
 def _lsh_doc_arrays_shared(spark, sf_dir):
     """Session-shared (doc_id, __sh set-array, sz) table of the full
     near-dup corpus — the confirm-side view every exact-Jaccard /
@@ -313,20 +297,18 @@ def _lsh_doc_arrays_shared(spark, sf_dir):
     jaccard_pairs reference it; plans are trees); one checkpointed
     build serves them all. Deterministic up to array order, which no
     consumer observes (array_intersect + size only)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "docarrays")
-    if key not in _LSH_SHARED:
-        shingles, _cand = _lsh_shared(spark, sf_dir)
-        _LSH_SHARED[key] = (
-            shingles.groupBy("doc_id")
-            .agg(
-                F.collect_set("shingle").alias("__sh"),
-                F.countDistinct("shingle").alias("sz"),
-            )
-            .localCheckpoint(eager=False)
+    shingles, _cand = _lsh_shared(spark, sf_dir)
+    return (
+        shingles.groupBy("doc_id")
+        .agg(
+            F.collect_set("shingle").alias("__sh"),
+            F.countDistinct("shingle").alias("sz"),
         )
-    return _LSH_SHARED[key]
+        .localCheckpoint(eager=False)
+    )
 
 
+@shared
 def _pfx_shingles_shared(spark, sf_dir):
     """Session-shared DECIMATED shingle table for the prefix-filter
     query: the shared full-corpus handle filtered to every 20th
@@ -334,13 +316,10 @@ def _pfx_shingles_shared(spark, sf_dir):
     re-materialized behind its own 1/20-sized checkpoint so the four
     consuming branches scan the small table rather than filtering
     the full-corpus blocks per branch."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pfx20")
-    if key not in _LSH_SHARED:
-        sh_all, _sigs, _buckets, _cand = _lsh_shared_full(spark, sf_dir)
-        _LSH_SHARED[key] = sh_all.where(
-            F.pmod(F.col("doc_id"), F.lit(1000000)) % 20 == 0
-        ).localCheckpoint(eager=False)
-    return _LSH_SHARED[key]
+    sh_all, _sigs, _buckets, _cand = _lsh_shared_full(spark, sf_dir)
+    return sh_all.where(
+        F.pmod(F.col("doc_id"), F.lit(1000000)) % 20 == 0
+    ).localCheckpoint(eager=False)
 
 
 @query("d_minhash_lsh_pairs", _lsh_pairs_oracle())
@@ -392,9 +371,7 @@ WHERE round(n_common / (sa.sz + sb.sz - n_common), 6) >= 0.5
 """
 
 
-_DUP_COMP_SHARED: dict = {}
-
-
+@shared
 def _dup_components_shared(spark, sf_dir):
     """Session-shared (node, component) table of the confirmed
     near-dup graph (LSH candidates → exact Jaccard ≥ 0.5 → min-label
@@ -404,19 +381,13 @@ def _dup_components_shared(spark, sf_dir):
     and each re-ran the iterative label-propagation rounds — the most
     expensive driver-driven loop in the dedup family. Min-label
     propagation has a unique fixpoint (smallest id per component), so
-    the table is deterministic; the `_lsh_shared` discipline applies
-    one level deeper."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DUP_COMP_SHARED:
-        shingles, cand = _lsh_shared(spark, sf_dir)
-        pairs = DD.jaccard_pairs(
-            shingles, "doc_id", min_jaccard=0.5, candidates=cand,
-            doc_arrays=_lsh_doc_arrays_shared(spark, sf_dir),
-        ).select("a", "b").localCheckpoint(eager=False)
-        _DUP_COMP_SHARED[key] = DD.connected_components(
-            pairs
-        ).localCheckpoint(eager=False)
-    return _DUP_COMP_SHARED[key]
+    the table is deterministic."""
+    shingles, cand = _lsh_shared(spark, sf_dir)
+    pairs = DD.jaccard_pairs(
+        shingles, "doc_id", min_jaccard=0.5, candidates=cand,
+        doc_arrays=_lsh_doc_arrays_shared(spark, sf_dir),
+    ).select("a", "b").localCheckpoint(eager=False)
+    return DD.connected_components(pairs).localCheckpoint(eager=False)
 
 
 @query("d_ngram_jaccard_pairs", _jaccard_oracle())
@@ -463,20 +434,14 @@ SELECT doc_id, CAST({value} AS BIGINT) AS simhash FROM s
 # The 32-bit signature table is consumed by d_simhash AND (twice, on
 # both sides of the banded self-join) by d_simhash_neardup — and the
 # explode + md5 + 32 bit-sum aggregation is the whole cost of either
-# query. One lazily-localCheckpointed handle per (session, data dir),
-# the `_lsh_shared` discipline: deterministic (md5-derived bits,
-# exact integer sums), never persisted across processes.
-_SIMHASH_SHARED: dict[tuple, "DataFrame"] = {}
-
-
+# query. One lazily-localCheckpointed handle per (session, data dir);
+# deterministic (md5-derived bits, exact integer sums).
+@shared
 def _simhash_shared(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIMHASH_SHARED:
-        docs = table(spark, sf_dir, "documents")
-        _SIMHASH_SHARED[key] = DD.simhash(
-            docs, "doc_id", "text", bits=32
-        ).localCheckpoint(eager=False)
-    return _SIMHASH_SHARED[key]
+    docs = table(spark, sf_dir, "documents")
+    return DD.simhash(
+        docs, "doc_id", "text", bits=32
+    ).localCheckpoint(eager=False)
 
 
 @query("d_simhash", _simhash_oracle())
@@ -971,26 +936,20 @@ SELECT query_id, neighbor_id, cosine_sim, CAST(rank AS INTEGER) AS rank FROM (
 """
 
 
-_IVF_CENT_SHARED: dict = {}
-
-
+@shared
 def _ivf_cent_shared(spark, sf_dir, n_cells=16, iters=1):
     """Session-shared IVF coarse-quantizer fit over the FULL
-    embeddings corpus — the `_lsh_shared` discipline. The fit is
+    embeddings corpus. The fit is
     deterministic (ordered seed pick, fold-order-exact kernel,
     rounded refinement), so every consumer sees the identical ~16-row
     local centroid table; refitting it per consuming query
     (s_ivf_ann_topk, s_ivf_nprobe_curve, the semdedup stream static
     index) repeated the full corpus assignment+aggregation job."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, iters)
-    if key not in _IVF_CENT_SHARED:
-        emb = table(spark, sf_dir, "embeddings")
-        _IVF_CENT_SHARED[key] = SIM.ivf_centroids(
-            emb, "vec_id", "embedding", n_cells, iters
-        )
-    return _IVF_CENT_SHARED[key]
+    emb = table(spark, sf_dir, "embeddings")
+    return SIM.ivf_centroids(emb, "vec_id", "embedding", n_cells, iters)
 
 
+@shared
 def _ivf_cells_shared(spark, sf_dir, n_cells=16, iters=1):
     """Session-shared cell-assigned prepped corpus — the inverted-list
     artifact an IVF deployment stores (id, vector, norm, unit vector,
@@ -1001,25 +960,19 @@ def _ivf_cells_shared(spark, sf_dir, n_cells=16, iters=1):
     ``s_ivf_ann_topk`` re-assigned the corpus per rep and
     ``s_ivf_nprobe_curve`` persisted/unpersisted its own copy per
     call."""
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "cells", n_cells, iters,
+    emb = table(spark, sf_dir, "embeddings")
+    cent = _ivf_cent_shared(spark, sf_dir, n_cells, iters)
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        SIM.as_double_array("embedding").alias("__cv"),
+    ).withColumn("__cn", SIM.norm(F.col("__cv")))
+    c = c.withColumn(
+        "__uv", F.transform("__cv", lambda x: x / F.col("__cn"))
     )
-    if key not in _IVF_CENT_SHARED:
-        emb = table(spark, sf_dir, "embeddings")
-        cent = _ivf_cent_shared(spark, sf_dir, n_cells, iters)
-        c = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            SIM.as_double_array("embedding").alias("__cv"),
-        ).withColumn("__cn", SIM.norm(F.col("__cv")))
-        c = c.withColumn(
-            "__uv", F.transform("__cv", lambda x: x / F.col("__cn"))
-        )
-        _IVF_CENT_SHARED[key] = SIM.attach_cells(c, cent).localCheckpoint(
-            eager=False
-        )
-    return _IVF_CENT_SHARED[key]
+    return SIM.attach_cells(c, cent).localCheckpoint(eager=False)
 
 
+@shared
 def _vec_lsh_shared(spark, sf_dir, dim=64, n_planes=4, n_tables=3):
     """Session-shared vector-LSH index: the prepped corpus and the
     corpus bucket table for tables 0..``n_tables``−1 (each
@@ -1029,20 +982,14 @@ def _vec_lsh_shared(spark, sf_dir, dim=64, n_planes=4, n_tables=3):
     prefixes with i < n — one corpus hashing pass serves
     s_lsh_ann_topk (3 tables), s_lsh_multiprobe_topk and both
     s_ann_recall_multiprobe arms (2 tables)."""
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "vlsh", dim,
-        n_planes, n_tables,
+    emb = table(spark, sf_dir, "embeddings")
+    c = SIM.prep_corpus(emb, "vec_id", "embedding").localCheckpoint(
+        eager=False
     )
-    if key not in _IVF_CENT_SHARED:
-        emb = table(spark, sf_dir, "embeddings")
-        c = SIM.prep_corpus(emb, "vec_id", "embedding").localCheckpoint(
-            eager=False
-        )
-        cb = SIM.lsh_corpus_buckets(
-            c, dim=dim, n_planes=n_planes, n_tables=n_tables
-        ).localCheckpoint(eager=False)
-        _IVF_CENT_SHARED[key] = (c, cb)
-    return _IVF_CENT_SHARED[key]
+    cb = SIM.lsh_corpus_buckets(
+        c, dim=dim, n_planes=n_planes, n_tables=n_tables
+    ).localCheckpoint(eager=False)
+    return c, cb
 
 
 def _vec_lsh_tables(cb, n_tables):
@@ -1052,28 +999,23 @@ def _vec_lsh_tables(cb, n_tables):
     return cb.where(F.substring("__b", 1, 3) < f"t{n_tables}:")
 
 
+@shared
 def _cos_truth_shared(spark, sf_dir, k=5):
     """Session-shared exact-cosine ground truth (top-``k`` of the
-    <10-id query set over the full corpus) — the `_ivf_cent_shared`
-    discipline applied to the recall harnesses' brute-force pass.
-    Deterministic (round-6 similarity, ties broken by neighbor_id),
-    so the (query_id, neighbor_id, cosine_sim, rank) table is
+    <10-id query set over the full corpus) for the recall harnesses'
+    brute-force pass. Deterministic (round-6 similarity, ties broken
+    by neighbor_id), so the (query_id, neighbor_id, cosine_sim, rank) table is
     identical however many consumers read it; before sharing, BOTH
     eager recall harnesses (s_ann_recall_multiprobe,
     s_ivf_nprobe_curve) re-ran the corpus×queries scoring job every
     bench rep. ``localCheckpoint`` cuts the scan lineage so the ≤
     |queries|·k-row table materializes once."""
-    key = (spark.sparkContext.applicationId, sf_dir, "cos_truth", k)
-    if key not in _IVF_CENT_SHARED:
-        emb = table(spark, sf_dir, "embeddings")
-        c = SIM.prep_corpus(emb, "vec_id", "embedding")
-        q = SIM.prep_queries(
-            emb.where(F.col("vec_id") < 10), "vec_id", "embedding"
-        )
-        _IVF_CENT_SHARED[key] = SIM.cosine_topk_prepped(
-            c, q, k=k
-        ).localCheckpoint(eager=False)
-    return _IVF_CENT_SHARED[key]
+    emb = table(spark, sf_dir, "embeddings")
+    c = SIM.prep_corpus(emb, "vec_id", "embedding")
+    q = SIM.prep_queries(
+        emb.where(F.col("vec_id") < 10), "vec_id", "embedding"
+    )
+    return SIM.cosine_topk_prepped(c, q, k=k).localCheckpoint(eager=False)
 
 
 @query("s_ivf_ann_topk", _ivf_oracle())

@@ -11,6 +11,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .artifacts import shared
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -33,30 +35,22 @@ BROADCASTABLE = {"region", "nation", "customer", "supplier", "part"}
 # (~75 ms of driver-side work per table reference, paid again on
 # every bench rep of every query). The memo reuses the immutable
 # logical plan — each action still scans the parquet files; nothing
-# about query execution or results is cached. Keyed by applicationId
-# so a new session (or a different data dir) never sees a stale
-# handle; the one unsupported pattern is mutating a table file
-# in-place mid-session, which nothing in the repo or the driver does
-# (test fixtures write to fresh tmp dirs).
-_DF_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# about query execution or results is cached. The one unsupported
+# pattern is mutating a table file in-place mid-session, which no
+# caller does (test fixtures write to fresh tmp dirs).
+@shared
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _DF_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if name == "events" and isinstance(
-            df.schema["ts"].dataType, T.LongType
-        ):
-            # TIMESTAMP(NANOS) read as long via
-            # spark.sql.legacy.parquet.nanosAsLong; truncate to micros
-            # the same way DuckDB narrows ns -> us (floor, positive
-            # epochs).
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        _DF_MEMO[key] = df
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and isinstance(
+        df.schema["ts"].dataType, T.LongType
+    ):
+        # TIMESTAMP(NANOS) read as long via
+        # spark.sql.legacy.parquet.nanosAsLong; truncate to micros
+        # the same way DuckDB narrows ns -> us (floor, positive
+        # epochs).
+        df = df.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
+        )
     return df

@@ -37,13 +37,10 @@ def test_unshare_all_clears_every_memo(spark):
     """The artifact eviction hook empties every session memo and the
     next consumer rebuilds (r8 ADVICE item 4)."""
     from historical_obs_platform_spark import artifacts
-    from historical_obs_platform_spark.queries.textops import (
-        _LSH_SHARED,
-        _lsh_shared,
-    )
+    from historical_obs_platform_spark.queries.textops import _lsh_shared
 
     sh_a, cand_a = _lsh_shared(spark, SF_SMALL)
-    assert _LSH_SHARED  # populated by the call above
+    assert artifacts._STORE  # populated by the call above
     n = artifacts.unshare_all()
     assert n >= 1
     for d in artifacts._memo_dicts():
