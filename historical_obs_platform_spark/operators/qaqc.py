@@ -18,12 +18,10 @@ requires both flags strictly null.
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import or_
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import q, with_sql
 from .windows import flag_long_runs
 
 # ------------------------------------------------------------- vocabulary
@@ -129,50 +127,59 @@ def present_vars(df: DataFrame, candidates=None) -> list[str]:
 def ensure_flag_columns(df: DataFrame, variables=None) -> DataFrame:
     """Manufacture null ``<var>_eraqc`` columns for every present
     variable (QAQC_pipeline.py:446-456)."""
-    out = df
-    for v in present_vars(df, variables):
-        if eraqc(v) not in out.columns:
-            out = out.withColumn(eraqc(v), F.lit(None).cast("double"))
-    return out
+    missing = [
+        eraqc(v) for v in present_vars(df, variables) if eraqc(v) not in df.columns
+    ]
+    if not missing:
+        return df
+    return with_sql(df, {c: "CAST(NULL AS DOUBLE)" for c in missing})
 
 
-def valid_mask(var: str, keep_yellow: bool = True, var2: str | None = None) -> Column:
-    """grab_valid_obs as a row predicate (qaqc_utils.py:326-378).
+def valid_sql(var: str, keep_yellow: bool = True, var2: str | None = None) -> str:
+    """grab_valid_obs as a SQL row predicate (qaqc_utils.py:326-378).
 
     - single-variable: unflagged rows, optionally keeping yellow
       (19/20) record-too-short warnings;
     - two-variable: both flags strictly null (the reference's var2
       branch ignores yellow).
     """
-    # one parsed SQL predicate: every check builds this mask per
+    # checks are written as SQL text: every check builds this mask per
     # variable, and the equivalent Column calls cost ~20 round trips
     # to the JVM each
-    fc = f"`{eraqc(var)}`"
+    fc = q(eraqc(var))
     if var2 is not None:
-        return F.expr(f"{fc} IS NULL AND `{eraqc(var2)}` IS NULL")
+        return f"{fc} IS NULL AND {q(eraqc(var2))} IS NULL"
     if keep_yellow:
-        return F.expr(
+        return (
             f"{fc} IS NULL OR {fc} IN "
             f"({FLAG_YELLOW_STATION}, {FLAG_YELLOW_VARIABLE})"
         )
-    return F.expr(f"{fc} IS NULL")
+    return f"{fc} IS NULL"
+
+
+def valid_mask(var: str, keep_yellow: bool = True, var2: str | None = None) -> Column:
+    """``valid_sql`` as a Column, for checks built with the Column API."""
+    return F.expr(valid_sql(var, keep_yellow, var2))
 
 
 def flag_expr(
     var: str,
-    condition: Column,
+    condition: str,
     flag: int,
     keep_yellow: bool = True,
     var2: str | None = None,
     flag_var: str | None = None,
-) -> Column:
-    """The new value of ``<flag_var or var>_eraqc``: ``flag`` where the
-    row is valid for checking AND ``condition`` holds, else unchanged.
-    Data is never deleted — only flagged. A check family writes all its
-    variables' flags in one ``withColumns`` of these."""
-    target = eraqc(flag_var or var)
-    mask = valid_mask(var, keep_yellow, var2) & condition
-    return F.when(mask, F.lit(float(flag))).otherwise(F.col(target))
+) -> str:
+    """The new value of ``<flag_var or var>_eraqc``, as SQL text:
+    ``flag`` where the row is valid for checking AND ``condition`` (SQL
+    text) holds, else unchanged. Data is never deleted — only flagged.
+    A check family writes all its variables' flags in one projection
+    of these."""
+    # a DOUBLE literal: Spark SQL reads 11.0 as DECIMAL(3,1)
+    return (
+        f"CASE WHEN ({valid_sql(var, keep_yellow, var2)}) AND ({condition})"
+        f" THEN {flag}D ELSE {q(eraqc(flag_var or var))} END"
+    )
 
 
 def write_flag(
@@ -184,10 +191,16 @@ def write_flag(
     var2: str | None = None,
     flag_var: str | None = None,
 ) -> DataFrame:
-    """``flag_expr`` written to its flag column."""
-    return df.withColumn(
-        eraqc(flag_var or var),
-        flag_expr(var, condition, flag, keep_yellow, var2, flag_var),
+    """``flag_expr`` written to its flag column, for a ``condition``
+    built as a Column."""
+    return with_sql(
+        df.withColumn("__flag_cond", condition),
+        {
+            eraqc(flag_var or var): flag_expr(
+                var, "__flag_cond", flag, keep_yellow, var2, flag_var
+            )
+        },
+        keep=df.columns,
     )
 
 
@@ -217,17 +230,13 @@ def normalize_sentinels(
 def world_record_check(df: DataFrame) -> DataFrame:
     """Flag 11: outside per-variable world/regional record range
     (qaqc_wholestation.py:689-842)."""
-    return df.withColumns(
-        {
-            eraqc(v): flag_expr(
-                v,
-                (F.col(v) < F.lit(WORLD_RECORD_LIMITS[v][0]))
-                | (F.col(v) > F.lit(WORLD_RECORD_LIMITS[v][1])),
-                FLAG_WORLD_RECORD,
-            )
-            for v in present_vars(df, list(WORLD_RECORD_LIMITS))
-        }
-    )
+    flags = {}
+    for v in present_vars(df, list(WORLD_RECORD_LIMITS)):
+        lo, hi = WORLD_RECORD_LIMITS[v]
+        flags[eraqc(v)] = flag_expr(
+            v, f"{q(v)} < {lo!r}D OR {q(v)} > {hi!r}D", FLAG_WORLD_RECORD
+        )
+    return with_sql(df, flags)
 
 
 # ----------------------------------------------------------- L1 supersat
@@ -236,17 +245,15 @@ def supersaturation_check(df: DataFrame) -> DataFrame:
     (qaqc_logic_checks.py:28-77); only rows valid for BOTH vars."""
     if "tas" not in df.columns:
         return df
-    return df.withColumns(
+    return with_sql(
+        df,
         {
             eraqc(dew): flag_expr(
-                "tas",
-                F.col(dew) > F.col("tas"),
-                FLAG_SUPERSATURATION,
-                var2=dew,
-                flag_var=dew,
+                "tas", f"{q(dew)} > `tas`", FLAG_SUPERSATURATION,
+                var2=dew, flag_var=dew,
             )
             for dew in present_vars(df, ["tdps", "tdps_derived"])
-        }
+        },
     )
 
 
@@ -259,42 +266,44 @@ WETBULB_MIN_SPAN_HOURS = 24
 def wetbulb_streak_check(df: DataFrame) -> DataFrame:
     """Flag 13 on tdps across any window where the dewpoint depression
     (tas − tdps) is exactly 0 continuously for ≥ 24 h — instrument
-    failure (qaqc_logic_checks.py:80-151). O(n) sessionization replaces
-    the reference's candidate-start loop; same rows flagged."""
-    out = df
-    if "tas" not in df.columns:
-        return out
-    for dew in present_vars(df, ["tdps", "tdps_derived"]):
-        valid = valid_mask("tas", var2=dew)
-        pred = valid & (F.col("tas") - F.col(dew) == 0)
-        marked = flag_long_runs(
-            out,
-            "station",
-            "time",
-            predicate=pred,
-            min_span_seconds=WETBULB_MIN_SPAN_HOURS * 3600,
-            flag_col="__wb_flag",
-            flag_value=FLAG_WETBULB_STREAK,
-        )
-        out = marked.withColumn(
-            eraqc(dew),
-            F.when(
-                F.col("__wb_flag") == FLAG_WETBULB_STREAK,
-                F.lit(float(FLAG_WETBULB_STREAK)),
-            ).otherwise(F.col(eraqc(dew))),
-        ).drop("__wb_flag")
-    return out
+    failure (qaqc_logic_checks.py:80-151). O(n) run detection replaces
+    the reference's candidate-start loop; same rows flagged. Every dew
+    variable is tested in the same ordered passes: a variable's
+    predicate reads only ``tas``, its own values and their flags."""
+    dews = present_vars(df, ["tdps", "tdps_derived"])
+    if "tas" not in df.columns or not dews:
+        return df
+    marked = flag_long_runs(
+        df,
+        "station",
+        "time",
+        {
+            f"__wb_{dew}": f"{valid_sql('tas', var2=dew)} AND `tas` - {q(dew)} = 0"
+            for dew in dews
+        },
+        min_span_seconds=WETBULB_MIN_SPAN_HOURS * 3600,
+    )
+    return with_sql(
+        marked,
+        {
+            eraqc(dew): f"CASE WHEN {q('__wb_' + dew)} THEN "
+            f"{FLAG_WETBULB_STREAK}D ELSE {q(eraqc(dew))} END"
+            for dew in dews
+        },
+        keep=df.columns,
+    )
 
 
 # ------------------------------------------------------- L3 negative precip
 def negative_precip_check(df: DataFrame) -> DataFrame:
     """Flag 10: pr < 0, all precip variants
     (qaqc_logic_checks.py:154-208)."""
-    return df.withColumns(
+    return with_sql(
+        df,
         {
-            eraqc(v): flag_expr(v, F.col(v) < 0, FLAG_NEGATIVE_PRECIP)
+            eraqc(v): flag_expr(v, f"{q(v)} < 0", FLAG_NEGATIVE_PRECIP)
             for v in present_vars(df, PRECIP_VARS + ["accum_pr"])
-        }
+        },
     )
 
 
@@ -314,26 +323,28 @@ def precip_accum_ordering_check(df: DataFrame) -> DataFrame:
       the order-independent fixed semantics: both sides of a violated
       pair get flagged).
     """
-    # (flagged_var, other_var, violation, flag)
+    # (flagged_var, other_var, violation operator, flag)
     rules = [
-        ("pr_5min", "pr_1h", F.col("pr_5min") > F.col("pr_1h"), FLAG_PRECIP_SHORT_GT_LONG),
-        ("pr_5min", "pr_24h", F.col("pr_5min") > F.col("pr_24h"), FLAG_PRECIP_SHORT_GT_LONG),
-        ("pr_1h", "pr_5min", F.col("pr_1h") < F.col("pr_5min"), FLAG_PRECIP_LONG_LT_SHORT),
-        ("pr_1h", "pr_24h", F.col("pr_1h") > F.col("pr_24h"), FLAG_PRECIP_LONG_LT_SHORT),
-        ("pr_24h", "pr_5min", F.col("pr_24h") < F.col("pr_5min"), FLAG_PRECIP_LONG_LT_SHORT),
-        ("pr_24h", "pr_1h", F.col("pr_24h") < F.col("pr_1h"), FLAG_PRECIP_LONG_LT_SHORT),
-        ("pr_24h", "pr_localmid", F.col("pr_24h") < F.col("pr_localmid"), FLAG_PRECIP_24H_LT_LOCALMID),
+        ("pr_5min", "pr_1h", ">", FLAG_PRECIP_SHORT_GT_LONG),
+        ("pr_5min", "pr_24h", ">", FLAG_PRECIP_SHORT_GT_LONG),
+        ("pr_1h", "pr_5min", "<", FLAG_PRECIP_LONG_LT_SHORT),
+        ("pr_1h", "pr_24h", ">", FLAG_PRECIP_LONG_LT_SHORT),
+        ("pr_24h", "pr_5min", "<", FLAG_PRECIP_LONG_LT_SHORT),
+        ("pr_24h", "pr_1h", "<", FLAG_PRECIP_LONG_LT_SHORT),
+        ("pr_24h", "pr_localmid", "<", FLAG_PRECIP_24H_LT_LOCALMID),
     ]
-    # One withColumns: every pair's (valid-at-entry AND violated)
+    # One projection: every pair's (valid-at-entry AND violated)
     # predicate reads the entry state; of several pairs flagging one
     # variable, the later rule's flag wins.
     flags = {}
-    for var, other, cond, flag in rules:
+    for var, other, op, flag in rules:
         if var in df.columns and other in df.columns:
-            flags[eraqc(var)] = F.when(
-                valid_mask(var, var2=other) & cond, F.lit(float(flag))
-            ).otherwise(flags.get(eraqc(var), F.col(eraqc(var))))
-    return df.withColumns(flags)
+            flags[eraqc(var)] = (
+                f"CASE WHEN ({valid_sql(var, var2=other)}) AND "
+                f"{q(var)} {op} {q(other)} THEN {flag}D "
+                f"ELSE {flags.get(eraqc(var), q(eraqc(var)))} END"
+            )
+    return with_sql(df, flags)
 
 
 # ----------------------------------------------------------- L5 calm wind
@@ -343,26 +354,22 @@ def calm_wind_dir_check(df: DataFrame) -> DataFrame:
     recoded to 360 (true northerly) and flagged 15."""
     if "sfcWind_dir" not in df.columns or "sfcWind" not in df.columns:
         return df
-    valid = valid_mask("sfcWind", var2="sfcWind_dir")
+    valid = f"({valid_sql('sfcWind', var2='sfcWind_dir')})"
     bad_calm = (
-        valid
-        & (F.col("sfcWind") == 0)
-        & (F.col("sfcWind_dir") != 0)
-        & F.col("sfcWind_dir").isNotNull()
+        f"{valid} AND sfcWind = 0 AND sfcWind_dir != 0"
+        " AND sfcWind_dir IS NOT NULL"
     )
-    bad_north = valid & (F.col("sfcWind") != 0) & (F.col("sfcWind_dir") == 0)
-    # one withColumns: both new columns read the entry-state values
-    return df.withColumns(
+    bad_north = f"{valid} AND sfcWind != 0 AND sfcWind_dir = 0"
+    # one projection: both new columns read the entry-state values
+    return with_sql(
+        df,
         {
-            eraqc("sfcWind_dir"): F.when(
-                bad_calm, F.lit(float(FLAG_CALM_WIND_DIR))
-            )
-            .when(bad_north, F.lit(float(FLAG_WIND_DIR_RESET_360)))
-            .otherwise(F.col(eraqc("sfcWind_dir"))),
-            "sfcWind_dir": F.when(bad_north, F.lit(360.0)).otherwise(
-                F.col("sfcWind_dir")
-            ),
-        }
+            eraqc("sfcWind_dir"): f"CASE WHEN {bad_calm} THEN "
+            f"{FLAG_CALM_WIND_DIR}D WHEN {bad_north} THEN "
+            f"{FLAG_WIND_DIR_RESET_360}D ELSE sfcWind_dir_eraqc END",
+            "sfcWind_dir": f"CASE WHEN {bad_north} THEN 360.0D "
+            "ELSE sfcWind_dir END",
+        },
     )
 
 
@@ -385,77 +392,59 @@ def station_statistics(df: DataFrame) -> DataFrame:
     ``__``-prefixed. Checks read only the columns they need, so the
     optimizer prunes the rest of the aggregate."""
     cols = set(df.columns)
-    any_data = reduce(
-        or_, [F.col(v).isNotNull() for v in present_vars(df)], F.lit(False)
+    any_data = " OR ".join(
+        ["false"] + [f"{q(v)} IS NOT NULL" for v in present_vars(df)]
     )
     heights = [c for c in (THERMOMETER_COL, ANEMOMETER_COL) if c in cols]
     ps_vars = present_vars(df, PRESSURE_VARS)
     latlon = [c for c in ("lat", "lon") if c in cols]
     per_elev = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(any_data, 1)).alias("__n_any"),
-        *[F.count(c).alias(f"__n_{c}") for c in latlon + heights],
-        *[F.min(c).alias(f"__hmin_{c}") for c in heights],
-        *[F.max(c).alias(f"__hmax_{c}") for c in heights],
-        *[F.sum(v).alias(f"__sum_{v}") for v in ps_vars],
-        *[F.count(v).alias(f"__n_{v}") for v in ps_vars],
+        "count(1) AS __n",
+        f"count(CASE WHEN {any_data} THEN 1 END) AS __n_any",
+        *[f"count({q(c)}) AS __n_{c}" for c in latlon + heights],
+        *[f"min({q(c)}) AS __hmin_{c}" for c in heights],
+        *[f"max({q(c)}) AS __hmax_{c}" for c in heights],
+        *[f"sum({q(v)}) AS __sum_{v}" for v in ps_vars],
+        *[f"count({q(v)}) AS __n_{v}" for v in ps_vars],
     ]
     per_station = [
-        F.sum("__n_any").alias("__n_any"),
+        "sum(__n_any) AS __n_any",
         *[
-            (F.sum(f"__n_{c}") if c in latlon else F.lit(0)).alias(f"__n_{c}")
+            f"{f'sum(__n_{c})' if c in latlon else '0'} AS __n_{c}"
             for c in ("lat", "lon")
         ],
-        *[
-            (F.sum(f"__n_{c}") < F.sum("__n")).alias(f"__hmiss_{c}")
-            for c in heights
-        ],
-        *[F.min(f"__hmin_{c}").alias(f"__hmin_{c}") for c in heights],
-        *[F.max(f"__hmax_{c}").alias(f"__hmax_{c}") for c in heights],
-        *[
-            (F.sum(f"__sum_{v}") / F.sum(f"__n_{v}")).alias(f"__mean_{v}")
-            for v in ps_vars
-        ],
+        *[f"sum(__n_{c}) < sum(__n) AS __hmiss_{c}" for c in heights],
+        *[f"min(__hmin_{c}) AS __hmin_{c}" for c in heights],
+        *[f"max(__hmax_{c}) AS __hmax_{c}" for c in heights],
+        *[f"sum(__sum_{v}) / sum(__n_{v}) AS __mean_{v}" for v in ps_vars],
     ]
     keys = ["station"]
     if "elevation" in cols:
         keys.append("elevation")
-        e = F.col("elevation")
-        minority = F.min(
-            F.when(
-                e.isNotNull(),
-                F.struct(F.col("__n").alias("n"), (-e).alias("neg")),
-            )
-        )
         per_station += [
-            F.count(e).alias("__n_elev"),
-            (F.max(e) - F.min(e)).alias("__elev_range"),
-            F.expr("percentile(elevation, 0.5, __n)").alias("__elev_med"),
-            (-minority.getField("neg")).alias("__minority_elev"),
+            "count(elevation) AS __n_elev",
+            "max(elevation) - min(elevation) AS __elev_range",
+            "percentile(elevation, 0.5, __n) AS __elev_med",
+            "-(min(CASE WHEN elevation IS NOT NULL THEN "
+            "struct(__n AS n, -elevation AS neg) END).neg) AS __minority_elev",
         ]
     else:
-        per_station.append(F.lit(None).cast("double").alias("__elev_med"))
+        per_station.append("CAST(NULL AS DOUBLE) AS __elev_med")
     return (
         df.groupBy(*keys)
-        .agg(*per_elev)
+        .agg(*map(F.expr, per_elev))
         .groupBy("station")
-        .agg(*per_station)
+        .agg(*map(F.expr, per_station))
     )
 
 
-def _reject_reason() -> Column:
+def _reject_reason() -> str:
     lo, hi = STATION_ELEV_RANGE
-    med = F.col("__elev_med")
     return (
-        F.when(F.col("__n_any") == 0, "no_data_vars")
-        .when(
-            (F.col("__n_lat") == 0) | (F.col("__n_lon") == 0),
-            "missing_latlon",
-        )
-        .when(
-            med.isNotNull() & ((med < lo) | (med > hi)),
-            "elevation_out_of_range",
-        )
+        "CASE WHEN __n_any = 0 THEN 'no_data_vars'"
+        " WHEN __n_lat = 0 OR __n_lon = 0 THEN 'missing_latlon'"
+        f" WHEN __elev_med IS NOT NULL AND (__elev_med < {lo!r}D"
+        f" OR __elev_med > {hi!r}D) THEN 'elevation_out_of_range' END"
     )
 
 
@@ -472,8 +461,8 @@ def station_gates(df: DataFrame) -> DataFrame:
     ``station_checks``."""
     return (
         station_statistics(df)
-        .select("station", _reject_reason().alias("reject_reason"))
-        .where(F.col("reject_reason").isNotNull())
+        .selectExpr("station", f"{_reject_reason()} AS reject_reason")
+        .where("reject_reason IS NOT NULL")
     )
 
 
@@ -486,7 +475,7 @@ def drop_rejected_stations(df: DataFrame) -> DataFrame:
     that ``station_checks`` joins in, so call it as
     ``station_checks(df, [drop_rejected_stations])``; on a bare frame
     those columns do not resolve."""
-    return df.where(_reject_reason().isNull())
+    return df.where(f"({_reject_reason()}) IS NULL")
 
 
 # ------------------------------------------------- sensor-height gates
@@ -532,19 +521,15 @@ def sensor_height_check(df: DataFrame) -> DataFrame:
     flags = {}
     for col, nominal, missing_flag, range_flag, targets in checks:
         lo, hi = nominal - HEIGHT_TOLERANCE_M, nominal + HEIGHT_TOLERANCE_M
-        within = (F.col(f"__hmin_{col}") >= lo) & (
-            F.col(f"__hmax_{col}") <= hi
-        )
+        within = f"__hmin_{col} >= {lo!r}D AND __hmax_{col} <= {hi!r}D"
         for t in targets:
-            valid = valid_mask(t)
+            valid = f"({valid_sql(t)})"
             flags[eraqc(t)] = (
-                F.when(
-                    valid & F.col(f"__hmiss_{col}"), F.lit(float(missing_flag))
-                )
-                .when(valid & ~within, F.lit(float(range_flag)))
-                .otherwise(F.col(eraqc(t)))
+                f"CASE WHEN {valid} AND __hmiss_{col} THEN {missing_flag}D"
+                f" WHEN {valid} AND NOT ({within}) THEN {range_flag}D"
+                f" ELSE {q(eraqc(t))} END"
             )
-    return out.withColumns(flags)
+    return with_sql(out, flags)
 
 
 # --------------------------------------------------- L8 elevation consistency
@@ -564,21 +549,18 @@ def elevation_consistency_check(df: DataFrame) -> DataFrame:
     frame those columns do not resolve."""
     if "elevation" not in df.columns:
         return df
-    wide = F.col("__elev_range") > ELEV_TOLERANCE_M
-    many = (
-        (F.col("__n_elev") > 2)
-        & wide
-        & (
-            F.abs(F.col("elevation") - F.col("__elev_med"))
-            > F.lit(ELEV_TOLERANCE_M)
-        )
+    tol = f"{ELEV_TOLERANCE_M!r}D"
+    wide = f"__elev_range > {tol}"
+    many = f"__n_elev > 2 AND {wide} AND abs(elevation - __elev_med) > {tol}"
+    two = f"__n_elev = 2 AND {wide} AND elevation = __minority_elev"
+    return with_sql(
+        df,
+        {
+            eraqc("elevation"): flag_expr(
+                "elevation", f"({many}) OR ({two})", FLAG_ELEV_RANGE
+            )
+        },
     )
-    two = (
-        (F.col("__n_elev") == 2)
-        & wide
-        & (F.col("elevation") == F.col("__minority_elev"))
-    )
-    return write_flag(df, "elevation", many | two, FLAG_ELEV_RANGE)
 
 
 # ------------------------------------------------------ pressure units fix
@@ -592,13 +574,12 @@ def pressure_units_fix(df: DataFrame) -> DataFrame:
     columns ``__mean_<var>`` that ``station_checks`` joins in, so call
     it as ``station_checks(df, [pressure_units_fix])``; on a bare frame
     those columns do not resolve."""
-    return df.withColumns(
+    return with_sql(
+        df,
         {
-            v: F.when(
-                F.col(f"__mean_{v}") < 10000, F.col(v) * F.lit(100.0)
-            ).otherwise(F.col(v))
+            v: f"CASE WHEN __mean_{v} < 10000 THEN {q(v)} * 100.0D ELSE {q(v)} END"
             for v in present_vars(df, PRESSURE_VARS)
-        }
+        },
     )
 
 
@@ -622,4 +603,5 @@ def station_checks(df: DataFrame, checks=STATION_CHECKS) -> DataFrame:
     out = df.join(F.broadcast(stats), "station", "left")
     for check in checks:
         out = check(out)
-    return out.drop(*[c for c in stats.columns if c != "station"])
+    drop = set(stats.columns) - {"station"}
+    return with_sql(out, {}, keep=[c for c in out.columns if c not in drop])

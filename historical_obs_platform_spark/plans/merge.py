@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import kernels as K
+from ..functions.sqltext import q, with_sql
 from ..operators import qaqc as Q
 from ..operators.resample import time_grid
 
@@ -23,6 +24,18 @@ from ..operators.resample import time_grid
 # observational takes first-in-hour (merge_hourly_standardization.py:126-128).
 SUM_VARS = ["pr", "pr_5min", "pr_15min", "pr_1h", "rsds"]
 CONSTANT_VARS = ["lat", "lon", "elevation"]
+
+
+def _synergistic_flag(out: DataFrame, derived: str, sources) -> DataFrame:
+    """Flag 38 on ``derived`` where any of its ``sources`` is flagged
+    (merge_derive_missing.py:202-250)."""
+    fc = Q.eraqc(derived)
+    other = q(fc) if fc in out.columns else "CAST(NULL AS DOUBLE)"
+    flagged = " OR ".join(f"{q(Q.eraqc(s))} IS NOT NULL" for s in sources)
+    return with_sql(
+        out,
+        {fc: f"CASE WHEN {flagged} THEN {Q.FLAG_DERIVED_SYNERGISTIC}D ELSE {other} END"},
+    )
 
 
 def derive_missing(df: DataFrame) -> DataFrame:
@@ -36,15 +49,7 @@ def derive_missing(df: DataFrame) -> DataFrame:
         out = out.withColumn(
             "tdps_derived", K.dewpoint_from_rh("tas", "hurs")
         )
-        out = Q.ensure_flag_columns(out, ["tdps_derived"])
-        out = out.withColumn(
-            Q.eraqc("tdps_derived"),
-            F.when(
-                F.col(Q.eraqc("tas")).isNotNull()
-                | F.col(Q.eraqc("hurs")).isNotNull(),
-                F.lit(float(Q.FLAG_DERIVED_SYNERGISTIC)),
-            ).otherwise(F.col(Q.eraqc("tdps_derived"))),
-        )
+        out = _synergistic_flag(out, "tdps_derived", ["tas", "hurs"])
     if "hurs" not in cols and "tas" in cols and (
         "tdps" in cols or "tdps_derived" in set(out.columns)
     ):
@@ -52,15 +57,7 @@ def derive_missing(df: DataFrame) -> DataFrame:
         out = out.withColumn(
             "hurs_derived", K.relhumid_from_dewpoint("tas", dew)
         )
-        out = Q.ensure_flag_columns(out, ["hurs_derived"])
-        out = out.withColumn(
-            Q.eraqc("hurs_derived"),
-            F.when(
-                F.col(Q.eraqc("tas")).isNotNull()
-                | F.col(Q.eraqc(dew)).isNotNull(),
-                F.lit(float(Q.FLAG_DERIVED_SYNERGISTIC)),
-            ).otherwise(F.col(Q.eraqc("hurs_derived"))),
-        )
+        out = _synergistic_flag(out, "hurs_derived", ["tas", dew])
     return out
 
 
@@ -79,49 +76,39 @@ def hourly_standardize(df: DataFrame) -> DataFrame:
     sum_vars = [v for v in variables if v in SUM_VARS]
     inst_vars = [v for v in variables if v not in SUM_VARS]
 
-    aggs = []
-    for v in inst_vars:
-        aggs.append(F.min_by(v, F.col("time")).alias(v))
-    for v in sum_vars:
-        aggs.append(
-            F.when(F.count(v) == 0, F.lit(None))
-            .otherwise(F.sum(v))
-            .alias(v)
-        )
-    for v in variables:
-        fc = Q.eraqc(v)
-        if fc in df.columns:
-            aggs.append(
-                F.array_join(
-                    F.array_sort(
-                        F.collect_set(F.col(fc).cast("int").cast("string"))
-                    ),
-                    ",",
-                ).alias(fc)
-            )
-    for v in const_vars:
-        aggs.append(F.first(v, ignorenulls=True).alias(v))
-    aggs.append(F.count(F.lit(1)).alias("n_source_obs"))
+    aggs = [f"min_by({q(v)}, time) AS {q(v)}" for v in inst_vars]
+    aggs += [
+        f"CASE WHEN count({q(v)}) = 0 THEN NULL ELSE sum({q(v)}) END AS {q(v)}"
+        for v in sum_vars
+    ]
+    aggs += [
+        f"array_join(array_sort(collect_set(CAST(CAST({q(fc)} AS INT) AS STRING))),"
+        f" ',') AS {q(fc)}"
+        for fc in map(Q.eraqc, variables)
+        if fc in df.columns
+    ]
+    aggs += [f"first({q(v)}, true) AS {q(v)}" for v in const_vars]
+    aggs.append("count(1) AS n_source_obs")
 
     hourly = df.groupBy(
-        "station", F.date_trunc("hour", F.col("time")).alias("time")
-    ).agg(*aggs)
+        F.col("station"), F.expr("date_trunc('hour', time) AS time")
+    ).agg(*map(F.expr, aggs))
 
     grid = time_grid(df, "station", "time", "1 hour").withColumnRenamed(
         "grid_ts", "time"
     )
     out = grid.join(hourly, ["station", "time"], "left")
-    out = out.withColumn(
-        "standardized_infill",
-        F.when(F.col("n_source_obs").isNull(), "y").otherwise("n"),
-    )
     # constants carried onto infilled rows from the station
-    from pyspark.sql.window import Window
-
-    w_stn = Window.partitionBy("station")
-    for v in const_vars:
-        out = out.withColumn(v, F.first(v, ignorenulls=True).over(w_stn))
-    return out
+    return with_sql(
+        out,
+        {
+            "standardized_infill": "CASE WHEN n_source_obs IS NULL THEN 'y' ELSE 'n' END",
+            **{
+                v: f"first({q(v)}, true) OVER (PARTITION BY station)"
+                for v in const_vars
+            },
+        },
+    )
 
 
 def flag_counts(df: DataFrame) -> DataFrame:
@@ -133,29 +120,21 @@ def flag_counts(df: DataFrame) -> DataFrame:
     flag_cols = [c for c in df.columns if c.endswith("_eraqc")]
     if not flag_cols:
         raise ValueError("no _eraqc columns present")
-    per_var = F.array(
-        *[
-            F.struct(
-                F.lit(fc[: -len("_eraqc")]).alias("variable"),
-                F.col(fc).cast("string").alias("flags"),
-            )
-            for fc in flag_cols
-        ]
+    per_var = ", ".join(
+        f"struct('{fc[: -len('_eraqc')]}' AS variable, "
+        f"CAST({q(fc)} AS STRING) AS flags)"
+        for fc in flag_cols
     )
     return (
-        df.select("station", F.inline(per_var))
-        .select(
-            "station",
-            "variable",
-            F.explode(F.split("flags", ",")).alias("flag"),
-        )
-        .where(F.col("flag").isNotNull() & (F.col("flag") != ""))
+        df.selectExpr("station", f"inline(array({per_var}))")
+        .selectExpr("station", "variable", "explode(split(flags, ',')) AS flag")
+        .where("flag IS NOT NULL AND flag != ''")
         .groupBy(
-            "station",
-            "variable",
-            F.col("flag").cast("double").cast("int").alias("flag"),
+            F.col("station"),
+            F.col("variable"),
+            F.expr("CAST(CAST(flag AS DOUBLE) AS INT) AS flag"),
         )
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.expr("count(1) AS n"))
     )
 
 
@@ -172,8 +151,7 @@ PUBLIC_COLUMNS = (
 def select_public_columns(df: DataFrame) -> DataFrame:
     """Merge part 4: filter to the public vocabulary, dropping raw-QC
     and intermediate helper columns (merge_clean_vars.py:46-89)."""
-    keep = [c for c in df.columns if c in PUBLIC_COLUMNS]
-    return df.select(*keep)
+    return df.selectExpr(*[q(c) for c in df.columns if c in PUBLIC_COLUMNS])
 
 
 def network_flag_rates(counts: DataFrame) -> DataFrame:

@@ -12,25 +12,36 @@ number of passes, whatever the number of variables it covers:
   consistency, pressure units) are projections over ONE broadcast
   station-statistics table (``qaqc.station_checks``);
 - the row-local logic checks write all their variables' flags in one
-  ``withColumns`` each, which Catalyst collapses into few projections;
-- the consecutive-streak and spike families share ordered
+  projection each, which Catalyst collapses into few projections;
+- the consecutive-streak, wet-bulb and spike families share ordered
   ``(station, time)`` windows across their variables
-  (``consecutive_streak_multi``, ``spike_check_multi``), plus one
-  small broadcast join each (resolution tiers, monthly criteria).
+  (``consecutive_streak_multi``, ``qaqc.wetbulb_streak_check``,
+  ``spike_check_multi``), plus one small broadcast join each
+  (resolution tiers, monthly criteria).
 
 Per-row work inside window operators costs more here than exchanges
 or job launches, so the chain keeps the number of passes over the rows
 small rather than replacing its aggregates by station windows.
+
+Checks are written as SQL text: each output column is one parsed
+expression (``F.expr``, ``selectExpr``, ``windows.with_sql``), so a
+step's plan is built in tens of Python -> JVM round trips, where the
+same expression as a Column tree costs a few round trips per node.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from ..functions.sqltext import q, with_sql
 from ..operators import qaqc as Q
-from ..operators.windows import deaccumulate, detect_spikes_multi
+from ..operators.windows import (
+    deaccumulate,
+    detect_spikes_multi,
+    over,
+    run_bounds,
+)
 
 # Straight-repeat streak thresholds keyed by inferred value resolution
 # (qaqc_unusual_streaks.py:44-122): (max_count, max_days) — a run
@@ -80,44 +91,32 @@ def value_resolution_multi(df: DataFrame, vars) -> DataFrame:
     (station, __var, resolution_tier). A var's tier depends only on
     its own raw values, which no check ever modifies."""
     structs = [
-        F.struct(F.lit(v).alias("var"), F.col(v).alias("v"))
-        for v in vars
-        if v in df.columns
+        f"struct('{v}' AS var, {q(v)} AS v)" for v in vars if v in df.columns
     ]
     if not structs:
         return df.sparkSession.createDataFrame(
             [], "station string, __var string, resolution_tier double"
         )
     distinct_vals = (
-        df.select("station", F.explode(F.array(*structs)).alias("__m"))
-        .select(
-            "station",
-            F.col("__m.var").alias("__var"),
-            F.col("__m.v").alias("__v"),
-        )
-        .where(F.col("__v").isNotNull())
+        df.selectExpr("station", f"explode(array({', '.join(structs)})) AS __m")
+        .selectExpr("station", "__m.var AS __var", "__m.v AS __v")
+        .where("__v IS NOT NULL")
         .distinct()
     )
-    w = Window.partitionBy("station", "__var").orderBy("__v")
-    diffs = distinct_vals.withColumn(
-        "__d", F.round(F.col("__v") - F.lag("__v").over(w), 3)
-    ).where(F.col("__d") > 0)
-    counts = diffs.groupBy("station", "__var", "__d").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    pick = Window.partitionBy("station", "__var").orderBy(
-        F.desc("__n"), F.asc("__d")
-    )
+    w = over(["station", "__var"], "__v")
+    diffs = distinct_vals.selectExpr(
+        "*", f"round(__v - lag(__v) OVER ({w}), 3) AS __d"
+    ).where("__d > 0")
+    counts = diffs.groupBy("station", "__var", "__d").agg(F.expr("count(1) AS __n"))
+    pick = over(["station", "__var"], "__n DESC, __d ASC")
     return (
-        counts.withColumn("__rk", F.row_number().over(pick))
-        .where(F.col("__rk") == 1)
-        .select(
+        counts.selectExpr("*", f"row_number() OVER ({pick}) AS __rk")
+        .where("__rk = 1")
+        .selectExpr(
             "station",
             "__var",
-            F.when(F.col("__d") >= 1.0, F.lit(1.0))
-            .when(F.col("__d") >= 0.5, F.lit(0.5))
-            .otherwise(F.lit(0.1))
-            .alias("resolution_tier"),
+            "CASE WHEN __d >= 1.0D THEN 1.0D WHEN __d >= 0.5D THEN 0.5D"
+            " ELSE 0.1D END AS resolution_tier",
         )
     )
 
@@ -133,41 +132,37 @@ def spike_check_multi(df: DataFrame, vars) -> DataFrame:
     ONE (station, month) aggregation every variable's diff-IQR
     criterion, ONE broadcast join attaches them, and
     ``detect_spikes_multi`` tests every variable in two more window
-    selects; the flags are written in one ``withColumns``. A var's
-    check reads only its own values and flags and writes only its own
+    selects; the flags are written in one projection. A var's check
+    reads only its own values and flags and writes only its own
     ``_eraqc`` column, so ``vars=[a, b]`` flags exactly as ``[a]``
     then ``[b]``."""
-    vars = [v for v in vars if v in df.columns]
+    cols = set(df.columns)
+    vars = [v for v in vars if v in cols]
     if not vars:
         return df
-    w = Window.partitionBy("station").orderBy("time")
-    d = df.withColumns(
-        {
-            **{f"__d_{v}": F.col(v) - F.lag(v).over(w) for v in vars},
-            "__month": F.date_trunc("month", F.col("time")),
-        }
+    w = over("station", "time")
+    d = df.selectExpr(
+        "*",
+        *[f"{q(v)} - lag({q(v)}) OVER ({w}) AS {q('__d_' + v)}" for v in vars],
+        "date_trunc('month', time) AS __month",
     )
     aggs = []
     for v in vars:
-        aggs.append(F.count(f"__d_{v}").alias(f"__n_{v}"))
+        dv = q("__d_" + v)
+        aggs.append(f"count({dv}) AS {q('__n_' + v)}")
         aggs.append(
-            F.expr(
-                f"percentile(__d_{v}, 0.75) - percentile(__d_{v}, 0.25)"
-            ).alias(f"__iqr_{v}")
+            f"percentile({dv}, 0.75) - percentile({dv}, 0.25) AS {q('__iqr_' + v)}"
         )
     crit = (
         d.groupBy("station", "__month")
-        .agg(*aggs)
-        .select(
+        .agg(*map(F.expr, aggs))
+        .selectExpr(
             "station",
             "__month",
             *[
-                F.when(
-                    F.col(f"__n_{v}") > SPIKE_MIN_POINTS,
-                    F.ceil(
-                        F.lit(SPIKE_IQR_FACTOR) * F.col(f"__iqr_{v}")
-                    ).cast("double"),
-                ).alias(f"__crit_{v}")
+                f"CASE WHEN {q('__n_' + v)} > {SPIKE_MIN_POINTS} THEN CAST("
+                f"ceil({SPIKE_IQR_FACTOR!r}D * {q('__iqr_' + v)}) AS DOUBLE)"
+                f" END AS {q('__crit_' + v)}"
                 for v in vars
             ],
         )
@@ -176,23 +171,22 @@ def spike_check_multi(df: DataFrame, vars) -> DataFrame:
         d.join(F.broadcast(crit), ["station", "__month"], "left"),
         "station",
         "time",
-        [(v, F.col(f"__crit_{v}"), f"__spike_{v}") for v in vars],
+        [(v, q(f"__crit_{v}"), f"__spike_{v}") for v in vars],
         max_gap_seconds=SPIKE_MAX_GAP_HOURS * 3600,
         max_len=3,
     )
-    out = out.withColumns(
+    return with_sql(
+        out,
         {
             Q.eraqc(v): Q.flag_expr(
                 v,
-                F.col(f"__spike_{v}") & F.col(f"__crit_{v}").isNotNull(),
+                f"{q('__spike_' + v)} AND {q('__crit_' + v)} IS NOT NULL",
                 Q.FLAG_SPIKE,
             )
             for v in vars
-        }
-    )
-    return out.drop(
-        "__month",
-        *[f"__{p}_{v}" for p in ("d", "crit", "spike") for v in vars],
+        },
+        # the join moved its keys first
+        keep=[c for c in out.columns if c in cols],
     )
 
 
@@ -208,96 +202,54 @@ def consecutive_streak_multi(df: DataFrame, vars) -> DataFrame:
     resolution and to variables the table does not list.
 
     Every variable shares the passes: one broadcast join of the
-    resolution tiers pivoted to (station, __tier_<var>…); one ordered
-    window select finds each variable's run starts and ends (value
-    differs from the previous / next row); one running window carries
-    each run's start row and time forward and one reversed running
-    window carries its end back, so run length and span need no
-    per-run window. The flags are written in one ``withColumns``. A
-    var's check reads only its own values and flags and writes only its
-    own ``_eraqc`` column, so ``vars=[a, b]`` flags exactly as ``[a]``
-    then ``[b]``."""
-    vars = [v for v in vars if v in df.columns]
+    resolution tiers pivoted to (station, __tier_<var>…), and the
+    ordered passes of ``run_bounds``, which give each row its run's
+    first and last row and time with no per-run window. The flags are
+    written in one projection. A var's check reads only its own values
+    and flags and writes only its own ``_eraqc`` column, so
+    ``vars=[a, b]`` flags exactly as ``[a]`` then ``[b]``."""
+    cols = set(df.columns)
+    vars = [v for v in vars if v in cols]
     if not vars:
         return df
-    count_lim = {v: F.lit(STREAK_MIN_COUNT) for v in vars}
-    days_lim = {v: F.lit(STREAK_MIN_SPAN_DAYS) for v in vars}
+    count_lim = {v: str(STREAK_MIN_COUNT) for v in vars}
+    days_lim = {v: f"{STREAK_MIN_SPAN_DAYS!r}D" for v in vars}
     work = df
     tiered = [v for v in vars if v in STRAIGHT_REPEAT_THRESHOLDS]
     if tiered:
         tiers = value_resolution_multi(df, tiered).groupBy("station").agg(
             *[
-                F.max(
-                    F.when(F.col("__var") == v, F.col("resolution_tier"))
-                ).alias(f"__tier_{v}")
+                F.expr(
+                    f"max(CASE WHEN __var = '{v}' THEN resolution_tier END)"
+                    f" AS {q('__tier_' + v)}"
+                )
                 for v in tiered
             ]
         )
         work = df.join(F.broadcast(tiers), "station", "left")
         for v in tiered:
-            tier = F.col(f"__tier_{v}")
-            max_count = max_days = F.lit(None)
+            tier = q(f"__tier_{v}")
+            max_count = max_days = "NULL"
             for t, (cnt, days) in STRAIGHT_REPEAT_THRESHOLDS[v].items():
-                max_count = F.when(tier == t, F.lit(cnt)).otherwise(max_count)
-                max_days = F.when(tier == t, F.lit(days)).otherwise(max_days)
-            count_lim[v] = F.coalesce(max_count, count_lim[v])
-            days_lim[v] = F.coalesce(max_days, days_lim[v])
+                max_count = f"CASE WHEN {tier} = {t!r}D THEN {cnt} ELSE {max_count} END"
+                max_days = f"CASE WHEN {tier} = {t!r}D THEN {days} ELSE {max_days} END"
+            count_lim[v] = f"coalesce({max_count}, {count_lim[v]})"
+            days_lim[v] = f"coalesce({max_days}, {days_lim[v]})"
 
-    w = Window.partitionBy("station").orderBy("time")
-    # Catalyst does not share a window function between the
-    # expressions that use it, so the first/last-row tests are
-    # columns, computed once for every variable
-    first, last = F.col("__idx") == 1, F.col("__last")
-    edges = {}
-    for v in vars:
-        edges[f"__start_{v}"] = first | ~F.col(v).eqNullSafe(F.lag(v).over(w))
-        edges[f"__end_{v}"] = last | ~F.col(v).eqNullSafe(F.lead(v).over(w))
-    forward = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    back = (
-        Window.partitionBy("station")
-        .orderBy(F.desc("__idx"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    bounds = {}
-    for v in vars:
-        start, end = F.col(f"__start_{v}"), F.col(f"__end_{v}")
-        bounds[f"__i0_{v}"] = F.max(F.when(start, F.col("__idx"))).over(forward)
-        bounds[f"__t0_{v}"] = F.max(F.when(start, F.col("time"))).over(forward)
-        bounds[f"__i1_{v}"] = F.min(F.when(end, F.col("__idx"))).over(back)
-        bounds[f"__t1_{v}"] = F.min(F.when(end, F.col("time"))).over(back)
-    spans = (
-        work.withColumns(
-            {
-                "__idx": F.row_number().over(w),
-                "__last": F.lead(F.lit(1)).over(w).isNull(),
-            }
-        )
-        .withColumns(edges)
-        .withColumns(bounds)
-    )
-
+    spans = run_bounds(work, "station", "time", vars)
     flags = {}
     for v in vars:
-        run_len = F.col(f"__i1_{v}") - F.col(f"__i0_{v}") + 1
+        run_len = f"({q('__i1_' + v)} - {q('__i0_' + v)} + 1)"
         run_days = (
-            F.unix_timestamp(F.col(f"__t1_{v}"))
-            - F.unix_timestamp(F.col(f"__t0_{v}"))
-        ) / F.lit(86400.0)
-        bad = F.col(v).isNotNull() & (
-            (run_len > count_lim[v])
-            | ((run_days > days_lim[v]) & (run_len > 1))
+            f"(unix_timestamp({q('__t1_' + v)}) - "
+            f"unix_timestamp({q('__t0_' + v)})) / 86400.0D"
+        )
+        bad = (
+            f"{q(v)} IS NOT NULL AND ({run_len} > {count_lim[v]}"
+            f" OR ({run_days} > {days_lim[v]} AND {run_len} > 1))"
         )
         flags[Q.eraqc(v)] = Q.flag_expr(v, bad, Q.FLAG_STREAK_CONSECUTIVE)
-    return spans.withColumns(flags).drop(
-        "__idx",
-        "__last",
-        *[f"__tier_{v}" for v in tiered],
-        *[
-            f"__{p}_{v}"
-            for p in ("start", "end", "i0", "t0", "i1", "t1")
-            for v in vars
-        ],
-    )
+    return with_sql(spans, flags, keep=[c for c in spans.columns if c in cols])
 
 
 def deaccumulate_precip(df: DataFrame) -> DataFrame:

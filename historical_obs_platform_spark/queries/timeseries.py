@@ -120,7 +120,7 @@ def w6_spike_flags(spark, sf_dir):
         joined,
         "user_id",
         "ts",
-        [("value", F.lit(1.5) * F.col("iqr"), "is_spike")],
+        [("value", "1.5D * iqr", "is_spike")],
         max_len=1,
     )
     return flagged.where(F.col("is_spike")).select("user_id", "ts", "value")
@@ -180,16 +180,10 @@ FROM spans WHERE pred = 1 AND span >= 14400
 def w8_long_run_flags(spark, sf_dir):
     ev = _events(spark, sf_dir)
     flagged = wd.flag_long_runs(
-        ev,
-        "user_id",
-        "ts",
-        predicate=F.col("value") > 100,
-        min_span_seconds=4 * 3600,
-        flag_col="flag",
-        flag_value=13,
+        ev, "user_id", "ts", {"__long": "value > 100"}, min_span_seconds=4 * 3600
     )
-    return flagged.where(F.col("flag") == 13).select(
-        "event_id", "user_id", "ts", "value", "flag"
+    return flagged.where("__long").selectExpr(
+        "event_id", "user_id", "ts", "value", "13 AS flag"
     )
 
 

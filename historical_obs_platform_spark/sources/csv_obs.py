@@ -10,13 +10,14 @@ applies the v1 period filter, per file, in pandas. Here:
   inference in production paths);
 - duplicate-column resolution = a rename map applied at select time;
 - sentinel and timeout rows are predicates;
-- the period filter is a pushed-down timestamp range.
+- the period filter is a pushed-down timestamp range, end-exclusive.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..functions.sqltext import q
 
 # MADIS sensor-suffix renames (MADIS_clean.py:1692-1694)
 DEFAULT_RENAMES = {
@@ -46,8 +47,9 @@ def read_csv_obs(
     Returns the canonical long-format frame (station, time, vars...);
     rows with unparseable station/time are dropped (the reference's
     timeout-row cleanup), sentinel strings become null before the
-    numeric cast, and the period filter is a range predicate (pushed
-    down; P5, MADIS_clean.py:337-345).
+    numeric cast, and the period filter is a range predicate, start
+    inclusive and end exclusive (pushed down; P5,
+    MADIS_clean.py:337-345).
     """
     reader = spark.read.option("header", True)
     df = (
@@ -60,33 +62,32 @@ def read_csv_obs(
     # re-enable the default map for non-MADIS networks)
     if renames is None:
         renames = DEFAULT_RENAMES
-    for old, new in renames.items():
-        if old in df.columns:
-            df = df.withColumnRenamed(old, new)
-    ts = (
-        F.to_timestamp(F.col(time_col), time_format)
-        if time_format
-        else F.to_timestamp(F.col(time_col))
-    )
-    df = df.withColumn(time_col, ts)
-    df = df.where(F.col(station_col).isNotNull() & F.col(time_col).isNotNull())
-    for c in df.columns:
-        if c in (station_col, time_col) or c in keep_strings:
+    nulls = ", ".join("'" + s.replace("'", "\\'") + "'" for s in sentinels)
+    # one schema read, one projection of SQL text (a Column-API select
+    # costs several JVM round trips per column)
+    cols = []
+    for raw, dtype in df.dtypes:
+        c = renames.get(raw, raw)
+        if c == time_col:
+            fmt = f", '{time_format}'" if time_format else ""
+            e = f"to_timestamp({q(raw)}{fmt})"
+        elif c == station_col or c in keep_strings or dtype != "string":
             # keep_strings: QC-flag columns whose letter codes must
             # survive verbatim (the numeric cast would null them)
-            continue
-        if dict(df.dtypes)[c] == "string":
-            cleaned = F.when(
-                F.trim(F.col(c)).isin(*sentinels), F.lit(None)
-            ).otherwise(F.col(c))
+            e = q(raw)
+        else:
             # try_cast: non-numeric junk columns become all-null
             # instead of failing the scan under ANSI mode
-            df = df.withColumn(c, cleaned.try_cast("double"))
-    if period:
-        df = df.where(
-            F.col(time_col).between(
-                F.lit(period[0]).cast("timestamp"),
-                F.lit(period[1]).cast("timestamp"),
+            e = (
+                f"try_cast(CASE WHEN trim({q(raw)}) IN ({nulls}) THEN NULL"
+                f" ELSE {q(raw)} END AS DOUBLE)"
             )
+        cols.append(f"{e} AS {q(c)}")
+    keep = f"{q(station_col)} IS NOT NULL AND {q(time_col)} IS NOT NULL"
+    if period:
+        # inclusive start, EXCLUSIVE end, as NetworkSpec.period
+        keep += (
+            f" AND {q(time_col)} >= CAST('{period[0]}' AS TIMESTAMP)"
+            f" AND {q(time_col)} < CAST('{period[1]}' AS TIMESTAMP)"
         )
-    return df.dropDuplicates([station_col, time_col])
+    return df.selectExpr(*cols).where(keep).dropDuplicates([station_col, time_col])

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import kernels as K
+from ..functions.sqltext import q, with_sql
 
 from .csv_obs import V1_PERIOD  # single definition of the v1 window
 
@@ -293,31 +294,36 @@ def clean_network(
     """
     if isinstance(spec, str):
         spec = NETWORKS[spec]
-    cols = set(df.columns)
-    for raw, canon in spec.renames.items():
-        if raw in cols:
-            df = df.withColumnRenamed(raw, canon)
-    for raw, canon in spec.qc_renames.items():
-        if raw in cols:
-            df = df.withColumnRenamed(raw, canon)
-            df = df.withColumn(canon, F.col(canon).cast("string"))
-    for canon, conv in spec.conversions.items():
-        if canon in df.columns:
-            df = df.withColumn(canon, CONVERSIONS[conv](canon))
+    # one schema read and one projection: the renames, QC casts and
+    # clock shift as SQL text (one JVM round trip per column, where a
+    # Column costs a few per node), then the unit conversions through
+    # the shared kernels, which Catalyst folds into the same Project
+    renamed = {**spec.renames, **spec.qc_renames}
+    cols = []
+    for raw in df.columns:
+        canon = renamed.get(raw, raw)
+        e = q(raw)
+        if raw in spec.qc_renames:
+            e = f"CAST({e} AS STRING)"
+        elif canon == time_col and spec.utc_offset_hours:
+            e = f"{e} + make_interval(0, 0, 0, 0, {spec.utc_offset_hours}, 0, 0BD)"
+        cols.append(f"{e} AS {q(canon)}")
+    df = df.selectExpr(*cols)
+    conv = {
+        canon: CONVERSIONS[name](canon)
+        for canon, name in spec.conversions.items()
+        if canon in df.columns
+    }
     if spec.elevation_unit == "ft" and "elevation" in df.columns:
-        df = df.withColumn("elevation", K.ft_to_m("elevation"))
-    if spec.utc_offset_hours:
-        df = df.withColumn(
-            time_col,
-            F.col(time_col)
-            + F.make_interval(hours=F.lit(spec.utc_offset_hours)),
-        )
+        conv["elevation"] = K.ft_to_m(conv.get("elevation", "elevation"))
+    if conv:
+        df = df.withColumns(conv)
     if spec.period:
         # inclusive start, EXCLUSIVE end — as documented on the spec
         # field (between() would keep the end-boundary instant)
         df = df.where(
-            (F.col(time_col) >= F.lit(spec.period[0]).cast("timestamp"))
-            & (F.col(time_col) < F.lit(spec.period[1]).cast("timestamp"))
+            f"{q(time_col)} >= CAST('{spec.period[0]}' AS TIMESTAMP)"
+            f" AND {q(time_col)} < CAST('{spec.period[1]}' AS TIMESTAMP)"
         )
     if (
         spec.psl_only_if_no_ps
@@ -332,14 +338,12 @@ def clean_network(
         # cleaner, keyed the same way every downstream QAQC stage
         # partitions, so at scale it coalesces with the next stage's
         # exchange rather than adding one.
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("station")
-        df = df.withColumn(
-            "psl",
-            F.when(
-                F.count("ps").over(w) > 0, F.lit(None).cast("double")
-            ).otherwise(F.col("psl")),
+        df = with_sql(
+            df,
+            {
+                "psl": "CASE WHEN count(ps) OVER (PARTITION BY station) > 0"
+                " THEN CAST(NULL AS DOUBLE) ELSE psl END"
+            },
         )
     return df
 

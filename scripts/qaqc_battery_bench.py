@@ -7,7 +7,9 @@ parquet, then times the full ~20-check battery (`run_qaqc` with
 distribution tests + both pandas islands) end-to-end with a noop
 sink. Reports first-run and steady-state (min of N warm) walls for
 the full chain and the logic-only chain; the difference is the
-distribution-family cost.
+distribution-family cost. Beside each wall it prints the py4j round
+trips (Python -> JVM commands) the ``run_qaqc`` call made to build
+its plan, so a plan-building regression shows without a profiler.
 
 Usage: python scripts/qaqc_battery_bench.py [n_stations] [years] [reps]
 Defaults: 30 stations, 6 years, 3 warm reps.
@@ -19,6 +21,7 @@ import os
 import shutil
 import sys
 import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -100,23 +103,43 @@ def main() -> None:
         n_rows = spark.read.parquet(path).count()
         print(f"fixture: {n_rows:,} rows ({n_stations} stations x {years} y)")
 
-        def run(with_distribution: bool) -> float:
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+        me = threading.get_ident()
+        sent = [0]
+
+        def counting(*args, **kwargs):
+            # py4j's finalizer thread releases JVM objects; only this
+            # thread's commands build plans
+            if threading.get_ident() == me:
+                sent[0] += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+
+        def run(with_distribution: bool) -> tuple[float, int]:
+            """Wall time of one chain, and the py4j round trips its
+            ``run_qaqc`` call made to build the plan."""
             df = spark.read.parquet(path)
             t0 = time.perf_counter()
-            run_qaqc(df, with_distribution=with_distribution).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            return time.perf_counter() - t0
+            sent[0] = 0
+            flagged = run_qaqc(df, with_distribution=with_distribution)
+            trips = sent[0]
+            flagged.write.mode("overwrite").format("noop").save()
+            return time.perf_counter() - t0, trips
 
         for label, wd in [("full", True), ("logic-only", False)]:
-            first = run(wd)
+            first, first_trips = run(wd)
             warm = [run(wd) for _ in range(reps)]
             spark.catalog.clearCache()
+            walls = [w for w, _ in warm]
             print(
-                f"{label}: first {first:.1f} s, steady {min(warm):.1f} s "
-                f"(reps {['%.1f' % w for w in warm]}) "
-                f"= {n_rows / min(warm):,.0f} rows/s"
+                f"{label}: first {first:.1f} s ({first_trips:,} py4j round "
+                f"trips), steady {min(walls):.1f} s (reps "
+                f"{[f'{w:.1f} s / {n:,}' for w, n in warm]}) "
+                f"= {n_rows / min(walls):,.0f} rows/s"
             )
+        client.send_command = send
     finally:
         shutil.rmtree(out, ignore_errors=True)
     spark.stop()

@@ -271,3 +271,103 @@ def test_flag_counts_single_scan(spark, tmp_path):
     _station_frame(spark).write.parquet(path)
     plan = _formatted(flag_counts(spark.read.parquet(path)))
     assert _count(plan, "Scan parquet") == 1
+
+
+def test_wetbulb_window_count_independent_of_dew_vars(spark):
+    from historical_obs_platform_spark.operators import qaqc as Q
+
+    df = _station_frame(spark)
+    both = Q.ensure_flag_columns(df.selectExpr("*", "tdps AS tdps_derived"))
+    one = _formatted(Q.wetbulb_streak_check(df))
+    two = _formatted(Q.wetbulb_streak_check(both))
+    # both dew variables share the ordered passes: no per-variable
+    # (station, run) window and sort
+    for node in ("Window", "Sort"):
+        assert _count(one, node) == _count(two, node) > 0
+
+
+# ------------------------------------------------------------------
+# Plan-building cost: each step of the pass builds its plan in a few
+# hundred Python -> JVM round trips at most. Checks are SQL text (one
+# round trip per output column); Column trees cost a few per node, so
+# a return to Column-API expressions breaks these budgets.
+# ------------------------------------------------------------------
+class _RoundTrips:
+    """Counts the py4j commands the calling thread sends to the JVM
+    (py4j's finalizer thread, which releases garbage-collected JVM
+    objects, is not plan building and is left out)."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.n = 0
+
+    def __enter__(self):
+        import threading
+
+        me, send = threading.get_ident(), self.client.send_command
+
+        def counting(*args, **kwargs):
+            if threading.get_ident() == me:
+                self.n += 1
+            return send(*args, **kwargs)
+
+        self.send, self.client.send_command = send, counting
+        return self
+
+    def __exit__(self, *exc):
+        self.client.send_command = self.send
+
+
+def test_run_qaqc_round_trip_budget(spark):
+    from historical_obs_platform_spark.plans.qaqc_chain import run_qaqc
+
+    df = _station_frame(spark).selectExpr(
+        "*", "CAST(0.0 AS DOUBLE) AS pr", "CAST(180.0 AS DOUBLE) AS sfcWind_dir"
+    )
+    run_qaqc(df, with_distribution=False)  # JVM-side caches warm
+    with _RoundTrips(spark) as rt:
+        run_qaqc(df, with_distribution=False)
+    # measured ~900; the same checks as Column trees take ~3,500
+    # (~12,000 with DataFrame debugging on)
+    assert rt.n <= 1800, rt.n
+
+
+def test_clean_network_round_trip_budget(spark, tmp_path):
+    from historical_obs_platform_spark.sources.csv_obs import read_csv_obs
+    from historical_obs_platform_spark.sources.networks import (
+        NETWORKS,
+        clean_network,
+    )
+
+    head = (
+        "station,time,lat,lon,elevation,air_temp_set_1,air_temp_set_1_qc,"
+        "dew_point_temperature_set_1,pressure_set_1,sea_level_pressure_set_1,"
+        "wind_speed_set_1,wind_direction_set_1,precip_accum_set_1\n"
+    )
+    raw = tmp_path / "RAWS"
+    raw.mkdir()
+    for st in ("RAWS_A", "RAWS_B"):
+        (raw / f"{st}.csv").write_text(
+            head
+            + "".join(
+                f"{st},2015-01-01T00:{m:02d}:00Z,36.0,-120.0,300,12.{m % 10},,"
+                f"8.2,94989,101325,5.3,187,0.00\n"
+                for m in range(0, 60, 5)
+            )
+        )
+    spec = NETWORKS["RAWS"]
+
+    def clean():
+        obs = read_csv_obs(
+            spark, str(raw), renames={}, period=None,
+            keep_strings=tuple(spec.qc_renames),
+        )
+        return clean_network(obs, spec)
+
+    clean()
+    with _RoundTrips(spark) as rt:
+        out = clean()
+    assert "tas" in out.columns and "psl" in out.columns
+    # measured ~115; a withColumn and a schema read per column take
+    # ~580 (~1,300 with DataFrame debugging on)
+    assert rt.n <= 230, rt.n

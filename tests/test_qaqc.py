@@ -450,3 +450,59 @@ def test_station_checks_fixed_frame(spark):
         for r in got.itertuples(index=False)
     ]
     assert got == EXPECTED_STATION_CHECKS
+
+
+def _wetbulb_frame():
+    """Two stations, hourly, with both dew variables. Zero-depression
+    runs: tdps spans 25 h at hours 10-35 and 23 h at hours 60-83;
+    tdps_derived the other way round (23 h at 10-33, 25 h at 60-85).
+    Station Y repeats X with a tas flag inside tdps's 25 h run, which
+    splits it into runs too short to flag."""
+    n = 120
+    rows = []
+    for st in ("X", "Y"):
+        t = pd.date_range("2021-03-01", periods=n, freq="h")
+        tas = 280.0 + (np.arange(n) % 7)
+        tdps = tas - 3.0
+        tdps_d = tas - 2.0
+        tdps[10:36] = tas[10:36]
+        tdps[60:84] = tas[60:84]
+        tdps_d[10:34] = tas[10:34]
+        tdps_d[60:86] = tas[60:86]
+        tas_f = np.full(n, np.nan)
+        if st == "Y":
+            tas_f[22] = 11.0
+        rows.append(
+            pd.DataFrame(
+                {"station": st, "time": t, "tas": tas, "tdps": tdps,
+                 "tdps_derived": tdps_d, "tas_eraqc": tas_f}
+            )
+        )
+    return pd.concat(rows, ignore_index=True)
+
+
+def test_wetbulb_streak_both_dew_variables(spark):
+    """Each dew variable is tested on its own runs in one shared pass:
+    25 h runs flag 13, 23 h runs do not, and a flagged tas row
+    (invalid for the check) breaks a run."""
+    df = Q.ensure_flag_columns(spark.createDataFrame(_wetbulb_frame()))
+    got = (
+        Q.wetbulb_streak_check(df)
+        .select("station", "time", "tdps_eraqc", "tdps_derived_eraqc")
+        .toPandas()
+        .sort_values(["station", "time"])
+    )
+    hour = (got["time"] - pd.Timestamp("2021-03-01")).dt.total_seconds() // 3600
+
+    def flagged(st, col):
+        sel = (got["station"] == st) & (got[col] == 13)
+        return sorted(hour[sel].astype(int))
+
+    assert flagged("X", "tdps_eraqc") == list(range(10, 36))
+    assert flagged("X", "tdps_derived_eraqc") == list(range(60, 86))
+    # tas flagged at hour 22: 10-21 and 23-35 are runs of 11 h and 12 h
+    assert flagged("Y", "tdps_eraqc") == []
+    assert flagged("Y", "tdps_derived_eraqc") == list(range(60, 86))
+    assert got[["tdps_eraqc", "tdps_derived_eraqc"]].isin([13.0]).sum().sum() == (
+        26 + 26 + 26
+    )

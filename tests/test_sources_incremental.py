@@ -109,3 +109,22 @@ def test_network_flag_rates(spark):
     assert got[("NETB", "tas", 11)] == 2
     assert got[("ALL", "tas", 11)] == 10
     assert got[("ALL", "pr", 10)] == 7
+
+
+def test_read_csv_obs_period_end_exclusive(spark, tmp_path):
+    """The v1 period is start-inclusive and end-exclusive, as
+    NetworkSpec.period and clean_network: the last 5-minute stamp of
+    2022-08-31 is kept, the first instant of 2022-09-01 dropped."""
+    p = tmp_path / "edge.csv"
+    p.write_text(
+        "station,time,air_temp_set_1\n"
+        "MADIS_A,1980-01-01 00:00:00,280.0\n"
+        "MADIS_A,2022-08-31 23:55:00,281.0\n"
+        "MADIS_A,2022-09-01 00:00:00,282.0\n"
+    )
+    out = read_csv_obs(spark, str(p)).toPandas().sort_values("time")
+    assert [str(t) for t in out["time"]] == [
+        "1980-01-01 00:00:00",
+        "2022-08-31 23:55:00",
+    ]
+    assert list(out["tas"]) == [280.0, 281.0]
